@@ -29,56 +29,6 @@ import numpy as np
 
 from python_darima_spark.darima.arima_math import DEFAULT_TOL, sarima_to_ar
 
-# Direct handle on the LAPACK gufunc behind np.linalg.lstsq (numpy 1.26:
-# numpy/linalg/linalg.py::lstsq). The public wrapper spends ~25% of each
-# call on shape/type plumbing that is constant for the one shape this
-# module ever produces (real float64, m > n, single RHS); calling the
-# gufunc with the wrapper's exact rcond/extobj gives bit-identical
-# solutions (same dgelsd invocation) at ~40 us instead of ~55 us per fit.
-# Any import drift on a future numpy falls back to the public wrapper.
-try:  # pragma: no cover - trivially exercised via _ols
-    from numpy.linalg import _umath_linalg as _ul
-    from numpy.linalg.linalg import (
-        _raise_linalgerror_lstsq as _lstsq_err,
-        get_linalg_error_extobj as _get_extobj,
-    )
-
-    _LSTSQ_EXTOBJ = _get_extobj(_lstsq_err)
-except Exception:  # pragma: no cover
-    _ul = None
-    _LSTSQ_EXTOBJ = None
-
-_F64 = np.dtype(np.float64)
-_F64_EPS = float(np.finfo(np.float64).eps)
-
-
-def _lstsq_beta(X: np.ndarray, yv: np.ndarray) -> np.ndarray:
-    """``np.linalg.lstsq(X, yv, rcond=None)[0]`` minus wrapper overhead.
-
-    Mirrors the numpy 1.26 wrapper exactly for the tall real-float64
-    single-RHS case: gufunc ``lstsq_n`` (dgelsd), ``rcond = eps * max(m, n)``
-    (= ``eps * m`` since m > n), the same error extobj. Anything else —
-    missing private API, unexpected dtype, m <= n — takes the public
-    wrapper, so behavior is identical by construction either way.
-    """
-    m, n = X.shape
-    if (
-        _ul is None
-        or m <= n
-        or X.dtype is not _F64
-        or yv.dtype is not _F64
-    ):
-        return np.linalg.lstsq(X, yv, rcond=None)[0]
-    x, _, _, _ = _ul.lstsq_n(
-        X,
-        yv[:, None],
-        _F64_EPS * m,
-        signature="ddd->ddid",
-        extobj=_LSTSQ_EXTOBJ,
-    )
-    return x[:, 0]
-
-
 def _acf1(x: np.ndarray) -> float:
     x = x - x.mean()
     denom = float(np.dot(x, x))
@@ -272,32 +222,39 @@ def _ols(yv: np.ndarray, X: np.ndarray) -> tuple[np.ndarray, float, int]:
     # make lag columns near-collinear at ANY order. The rank-revealing
     # SVD path is the only one whose answers are placement- and
     # conditioning-stable, which the oracle hash gates require.
-    beta = _lstsq_beta(X, yv)
+    beta = np.linalg.lstsq(X, yv, rcond=None)[0]
     resid = yv - X @ beta
     sigma2 = float(np.dot(resid, resid) / max(1, yv.size))
     return beta, sigma2, yv.size
 
 
-def _fit_orders(
-    w: np.ndarray,
+def _candidate(
+    wc: np.ndarray,
     p: int,
     q: int,
     P: int,
+    Q: int,
     m: int,
     long_resid: np.ndarray | None,
-    Q: int = 0,
 ) -> dict | None:
-    try:
-        yv, X, _ = _build_design(
-            w, p, P, m, long_resid if (q or Q) else None, q, Q
-        )
-    except ValueError:
-        return None
-    beta, sigma2, n_eff = _ols(yv, X)
-    if sigma2 <= 0:
-        sigma2 = 1e-12
-    k = beta.size + 1  # + sigma2
-    aic = n_eff * np.log(sigma2) + 2.0 * k
+    """One scored (p, q, P, Q) model on the centred, differenced window —
+    white noise for (0, 0, 0, 0), an OLS / Hannan–Rissanen fit otherwise;
+    None when the window is too short for the orders."""
+    if p == q == P == Q == 0:
+        # σ² is the only parameter; the zero intercept is the centring
+        beta, n_eff, k = np.array([0.0]), wc.size, 1
+        sigma2 = max(float(wc.var()), 1e-12)
+    else:
+        try:
+            yv, X, _ = _build_design(
+                wc, p, P, m, long_resid if (q or Q) else None, q, Q
+            )
+        except ValueError:
+            return None
+        beta, sigma2, n_eff = _ols(yv, X)
+        if sigma2 <= 0:
+            sigma2 = 1e-12
+        k = beta.size + 1  # + sigma2
     return {
         "p": p,
         "q": q,
@@ -305,7 +262,7 @@ def _fit_orders(
         "Q": Q,
         "beta": beta,
         "sigma2": sigma2,
-        "aic": float(aic),
+        "aic": float(n_eff * np.log(sigma2) + 2.0 * k),
         "n_eff": n_eff,
     }
 
@@ -370,23 +327,6 @@ def _stepwise_search(
     p+q+P+Q the way max.order=40 does. Candidates a short window cannot
     support return None from the fitter and are skipped, like failed
     CSS-ML fits in R."""
-    if long_resid is None:
-        max_q = 0
-        max_Q = 0
-    if m <= 1:
-        max_P = 0
-        max_Q = 0
-
-    def fit(p: int, q: int, P: int, Q: int) -> dict | None:
-        if p == q == P == Q == 0:
-            var = max(float(wc.var()), 1e-12)
-            return {
-                "p": 0, "q": 0, "P": 0, "Q": 0,
-                "beta": np.array([0.0]), "sigma2": var,
-                "aic": wc.size * np.log(var) + 2.0, "n_eff": wc.size,
-            }
-        return _fit_orders(wc, p, q, P, m, long_resid, Q)
-
     seen: set[tuple[int, int, int, int]] = set()
 
     def ok(p: int, q: int, P: int, Q: int) -> bool:
@@ -401,7 +341,7 @@ def _stepwise_search(
         if not ok(*key) or key in seen or len(seen) >= nmodels:
             return None
         seen.add(key)
-        cand = fit(*key)
+        cand = _candidate(wc, *key, m, long_resid)
         if cand is not None and not _roots_admissible(cand):
             return None
         return cand
@@ -451,14 +391,19 @@ def auto_ar_fit(
 ) -> dict:
     """Fit a SARIMA-style model and return it in global AR(tol) linear form.
 
-    ``search="stepwise"`` runs the Hyndman–Khandakar neighborhood search
-    under AICc — the procedure ``forecast::auto.arima`` ACTUALLY executes
-    at the reference's call site (auto_arima.R:74 sets max.p/q/P/Q=20 and
-    max.order=40 but keeps the default stepwise=TRUE, so the reference
-    never enumerates the 21⁴ grid either); pass ``max_*=20,
-    max_order=40`` for reference-bounds parity
-    (``DarimaConfig(search="reference")``). The default ``search="grid"``
-    exhaustively scores the (smaller) declared bounds under AIC.
+    ``search`` is interpreted here and nowhere else:
+
+    * ``"grid"`` (default) scores every order within the declared bounds
+      under AIC;
+    * ``"stepwise"`` runs the Hyndman–Khandakar neighborhood search under
+      AICc — the procedure ``forecast::auto.arima`` ACTUALLY executes at
+      the reference's call site (auto_arima.R:74 sets max.p/q/P/Q=20 and
+      max.order=40 but keeps the default stepwise=TRUE, so the reference
+      never enumerates the 21⁴ grid either);
+    * ``"reference"`` is ``"stepwise"`` at those reference bounds: it
+      overrides ``max_p/q/P/Q`` with 20 and ``max_order`` with 40.
+
+    Any other value raises ``ValueError``.
 
     The candidate grid covers p, q, P AND seasonal-MA Q (Hannan–Rissanen
     ``eps_{t−m·j}`` regressors) — matching the shape of the reference's
@@ -468,6 +413,12 @@ def auto_ar_fit(
     ``d``, ``D``, ``mean``, ``drift``, ``sigma2``, ``m``, ``n``) and the
     linearized form (``beta0``, ``beta1``, ``pi`` — length ``tol``).
     """
+    if search == "reference":
+        # reference-bounds parity: auto_arima.R:74
+        search, max_order = "stepwise", 40
+        max_p = max_q = max_P = max_Q = 20
+    elif search not in ("grid", "stepwise"):
+        raise ValueError(f"unknown search {search!r}")
     y = np.asarray(y, dtype=float)
     y = y[~np.isnan(y)]
     n = y.size
@@ -532,27 +483,15 @@ def auto_ar_fit(
             wc, m, long_resid, max_p, max_q, max_P, max_Q, max_order
         )
     else:
-        best = None
-        for P in range(0, max_P + 1):
-            for Q in range(0, max_Q + 1):
-                for p in range(0, max_p + 1):
-                    for q in range(0, max_q + 1):
-                        if p == 0 and q == 0 and P == 0 and Q == 0:
-                            var0 = max(float(wc.var()), 1e-12)
-                            cand = {
-                                "p": 0, "q": 0, "P": 0, "Q": 0,
-                                "beta": np.array([0.0]),
-                                "sigma2": var0,
-                                "aic": wc.size * np.log(var0) + 2.0,
-                                "n_eff": wc.size,
-                            }
-                        else:
-                            cand = _fit_orders(wc, p, q, P, m, long_resid, Q)
-                        if cand is not None and (
-                            best is None or cand["aic"] < best["aic"]
-                        ):
-                            best = cand
-
+        # enumeration order decides AIC ties: min keeps the first
+        cands = [
+            _candidate(wc, p, q, P, Q, m, long_resid)
+            for P in range(max_P + 1)
+            for Q in range(max_Q + 1)
+            for p in range(max_p + 1)
+            for q in range(max_q + 1)
+        ]
+        best = min((c for c in cands if c is not None), key=lambda c: c["aic"])
     assert best is not None
     p, q, P, Q = best["p"], best["q"], best["P"], best["Q"]
     beta = best["beta"]

@@ -46,16 +46,17 @@ class DarimaConfig:
     period: int = 24               # data_time_freq (obs per seasonal cycle)
     method: str = "mean"           # "mean" | "dlsa"
     tol: int = DEFAULT_TOL         # AR truncation (auto_arima.R:71)
-    split_strategy: str = "range"
     max_p: int = 5
     max_q: int = 2
     max_P: int = 2
     max_Q: int = 1
+    # Passed through to fit.auto_ar_fit, which alone interprets it.
     # "grid" (default): exhaustive AIC over the compact bounds above.
     # "reference": the reference's EXACT search — Hyndman–Khandakar
     # stepwise under AICc at max.p=max.q=max.P=max.Q=20, max.order=40
     # (auto_arima.R:74 with forecast's default stepwise=TRUE), overriding
     # the bounds above. "stepwise": HK stepwise at the configured bounds.
+    # Anything else raises ValueError when the first window is fitted.
     search: str = "grid"
     max_order: int = 40
     # Pin differencing orders instead of per-window holdout selection.
@@ -68,7 +69,6 @@ class DarimaConfig:
     d: int | None = None
     D: int | None = None
     levels: tuple[int, int] = (80, 95)
-    compat_mean_divide_by_test_n: int | None = None  # reference bug R16 repro
 
 
 def fit_windows(
@@ -103,34 +103,23 @@ def fit_windows(
     observations and the DLSA ``T_total`` stays consistent with each
     window's NaN-dropped fit length.
     """
-    m, tol, method = cfg.period, cfg.tol, cfg.method
-    max_p, max_q, max_P = cfg.max_p, cfg.max_q, cfg.max_P
-    max_Q = cfg.max_Q
-    search, max_order = cfg.search, cfg.max_order
-    if search == "reference":
-        # reference-bounds parity: auto_arima.R:74
-        search = "stepwise"
-        max_p = max_q = max_P = max_Q = 20
-        max_order = 40
-    d_forced, D_forced = cfg.d, cfg.D
+    tol = cfg.tol
+    kw = dict(
+        m=cfg.period, tol=tol, method=cfg.method, max_p=cfg.max_p,
+        max_q=cfg.max_q, max_P=cfg.max_P, max_Q=cfg.max_Q, d=cfg.d, D=cfg.D,
+        search=cfg.search, max_order=cfg.max_order,
+    )
 
     @F.pandas_udf("array<double>")
     def fit_vec(ys: pd.Series) -> pd.Series:
-        out = []
-        for arr in ys:
-            out.append(fit_window_to_coef_vec(
-                np.asarray(arr, dtype=float), m=m, tol=tol, method=method,
-                max_p=max_p, max_q=max_q, max_P=max_P, max_Q=max_Q,
-                d=d_forced, D=D_forced, search=search, max_order=max_order,
-            ))
-        return pd.Series(out)
+        return pd.Series(
+            [fit_window_to_coef_vec(np.asarray(a, dtype=float), **kw) for a in ys]
+        )
 
     with_windows = (
         series_df
         if "window_id" in series_df.columns
-        else split_series(
-            series_df, cfg.num_windows, series_col, ts_col, cfg.split_strategy
-        )
+        else split_series(series_df, cfg.num_windows, series_col, ts_col)
     )
     packed = with_windows.where(F.col(y_col).isNotNull()).groupBy(
         F.col(series_col).cast("string").alias("series_id"),
@@ -177,21 +166,16 @@ def combine_coefs(coef_df: DataFrame, cfg: DarimaConfig) -> DataFrame:
     * ``dlsa``: per-coef Σ(w_k·θ_k) / Σw_k with w_k = T_k/σ²_k (values
       arrive pre-scaled from the fit; the weight is the ``sigma2`` row —
       auto_arima.R:103-110). Global σ² = T_total / Σw_k. This is the method
-      paper's normalization; the reference's literal post-processing
-      (darima.py:86-93) divides by the *test* length and no-ops the sigma2
-      update — reproduce via ``compat_mean_divide_by_test_n``.
+      paper's normalization, not the reference's literal post-processing
+      (darima.py:86-93), which divides by the *test* length and no-ops the
+      sigma2 update.
     """
     if cfg.method == "mean":
-        out = (
+        return (
             coef_df.where(F.col("coef") != "n_obs")
             .groupBy("series_id", "coef")
             .agg(F.avg("value").alias("value"))
         )
-        if cfg.compat_mean_divide_by_test_n:
-            out = out.withColumn(
-                "value", F.col("value") / F.lit(float(cfg.compat_mean_divide_by_test_n))
-            )
-        return out
     if cfg.method != "dlsa":
         raise ValueError(f"unknown combine method {cfg.method!r}")
 
