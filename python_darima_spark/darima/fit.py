@@ -10,9 +10,12 @@ statsmodels, so we implement the classical public algorithms directly:
   *Forecasting: Principles and Practice*, unit-root/seasonal-strength chapter);
 * AR/seasonal-AR estimation by OLS on lagged regressors;
 * MA terms by two-stage Hannan–Rissanen (long-AR residuals as proxies);
-* order selection by AIC over a bounded grid (reference bounds are
-  max.p=max.q=max.P=max.Q=20 at /root/reference/auto_arima.R:74; we default
-  lower for the grid's sake but the bounds are parameters).
+* order selection by AIC over a bounded grid or by the Hyndman–Khandakar
+  stepwise search under AICc (reference bounds are max.p=max.q=max.P=max.Q=20
+  at auto_arima.R:74; the grid defaults lower but the bounds are
+  parameters) — :func:`auto_ar_fit` is the one reader of ``search``;
+* in every search only admissible candidates (AR and MA roots outside the
+  unit circle, :func:`_roots_admissible`) can win, as in auto.arima.
 
 The fitted model is immediately linearized to the truncated-AR global form
 via :func:`python_darima_spark.darima.arima_math.sarima_to_ar`, which is the
@@ -326,7 +329,8 @@ def _stepwise_search(
     evaluated candidates (forecast's own cap). ``max_order`` bounds
     p+q+P+Q the way max.order=40 does. Candidates a short window cannot
     support return None from the fitter and are skipped, like failed
-    CSS-ML fits in R."""
+    CSS-ML fits in R. The bounds arrive capped by :func:`auto_ar_fit`:
+    no MA terms without ``long_resid``, no seasonal terms when m <= 1."""
     seen: set[tuple[int, int, int, int]] = set()
 
     def ok(p: int, q: int, P: int, Q: int) -> bool:
@@ -403,7 +407,10 @@ def auto_ar_fit(
     * ``"reference"`` is ``"stepwise"`` at those reference bounds: it
       overrides ``max_p/q/P/Q`` with 20 and ``max_order`` with 40.
 
-    Any other value raises ``ValueError``.
+    Any other value raises ``ValueError``. Every search picks only an
+    admissible model (:func:`_roots_admissible`): the grid takes the
+    lowest-AIC candidate that passes, and the holdout (d, D) selection
+    inherits the rule because it runs this same fit.
 
     The candidate grid covers p, q, P AND seasonal-MA Q (Hannan–Rissanen
     ``eps_{t−m·j}`` regressors) — matching the shape of the reference's
@@ -483,7 +490,6 @@ def auto_ar_fit(
             wc, m, long_resid, max_p, max_q, max_P, max_Q, max_order
         )
     else:
-        # enumeration order decides AIC ties: min keeps the first
         cands = [
             _candidate(wc, p, q, P, Q, m, long_resid)
             for P in range(max_P + 1)
@@ -491,7 +497,11 @@ def auto_ar_fit(
             for p in range(max_p + 1)
             for q in range(max_q + 1)
         ]
-        best = min((c for c in cands if c is not None), key=lambda c: c["aic"])
+        # lowest AIC first, enumeration order breaking ties (stable sort);
+        # roots are checked only from the winner down, and white noise is
+        # always admissible
+        ranked = sorted((c for c in cands if c is not None), key=lambda c: c["aic"])
+        best = next(c for c in ranked if _roots_admissible(c))
     assert best is not None
     p, q, P, Q = best["p"], best["q"], best["P"], best["Q"]
     beta = best["beta"]

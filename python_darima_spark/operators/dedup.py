@@ -1232,7 +1232,8 @@ def connected_components(
     convergence count. Rounds needed = graph diameter, and near-dup
     clusters are overwhelmingly tiny (pairs/triples — diameter 2-3), so
     this converges in a handful of rounds; ``max_iterations`` guards the
-    pathological chain. For graphs with genuinely large diameter switch
+    pathological chain, raising ``RuntimeError`` rather than returning
+    partial labels. For graphs with genuinely large diameter switch
     to the large-star/small-star contraction (Kiveris et al.), which the
     same join shape expresses in O(log n) rounds.
 
@@ -1276,9 +1277,11 @@ def connected_components(
         changed = updated.where("_changed").limit(1).count()
         labels = updated.drop("_changed")
         if changed == 0:
-            break
-    return labels.select(
-        F.col("node").alias(id_col), F.col("label").alias("cluster_id")
+            return labels.select(
+                F.col("node").alias(id_col), F.col("label").alias("cluster_id")
+            )
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} rounds"
     )
 
 

@@ -181,3 +181,46 @@ def test_roots_admissibility_rejects_explosive():
     assert not _roots_admissible(cand(ar=[0.7, 0.31]))  # root ~ unit circle
     assert _roots_admissible(cand(ma=[0.5]))
     assert not _roots_admissible(cand(ma=[-1.2]))       # non-invertible MA
+
+
+def test_grid_search_keeps_only_invertible_fits():
+    """The grid search applies the same root rule as the stepwise one: on
+    twice-differenced AR(1) windows the lowest-AIC MA(1) used to come out
+    non-invertible (seed 0: θ₁ ≈ −1.097, 7 of these 20 seeds)."""
+    from python_darima_spark.darima.fit import _roots_admissible
+
+    for seed in range(20):
+        rng = np.random.default_rng(seed)
+        y = np.zeros(500)
+        y[0] = rng.normal()
+        for t in range(1, 500):
+            y[t] = 0.5 * y[t - 1] + rng.normal()
+        fit = auto_ar_fit(
+            y, m=1, max_p=2, max_q=1, max_P=0, max_Q=0, d=2, D=0, tol=24
+        )
+        p, q = fit["ar"].size, fit["ma"].size
+        chosen = {
+            "p": p, "q": q, "P": 0, "Q": 0,
+            "beta": np.concatenate([[0.0], fit["ar"], fit["ma"]]),
+        }
+        assert _roots_admissible(chosen), (seed, fit["ar"], fit["ma"])
+
+
+def test_reference_search_is_stepwise_at_reference_bounds():
+    # lag-7 AR term: beyond the default grid's max_p = 5, so a "reference"
+    # search that fell through to the grid would fit a different model
+    y = _simulate_ar([0.3, 0, 0, 0, 0, 0, 0.4], 400, mu=10.0, seed=3)
+    ref = auto_ar_fit(y, tol=30, search="reference")
+    step = auto_ar_fit(
+        y, tol=30, search="stepwise", max_p=20, max_q=20, max_P=20, max_Q=20,
+        max_order=40,
+    )
+    assert ref.keys() == step.keys()
+    for k in ref:
+        assert np.array_equal(ref[k], step[k]), k
+
+
+def test_unknown_search_raises():
+    y = _simulate_ar(0.5, 200, seed=1)
+    with pytest.raises(ValueError, match="unknown search"):
+        auto_ar_fit(y, search="Grid")

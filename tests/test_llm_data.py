@@ -788,6 +788,22 @@ def test_connected_components_topology(spark):
     }
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """A path of 8 nodes needs 7 propagation rounds plus one that changes
+    nothing: 3 rounds must raise, not return partial labels."""
+    from python_darima_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, nodes, "doc_id", max_iterations=3)
+    out = connected_components(edges, nodes, "doc_id").toPandas()
+    assert sorted(out.doc_id) == list(range(8))
+    assert (out.cluster_id == 0).all(), out
+
+
 def test_containment_finds_doc_inside_doc_jaccard_misses(spark):
     """The asymmetric case: doc B = A's full text embedded in a ~6x
     larger document. Shingle-Jaccard ≈ |A|/|B| ≈ 0.17 — far below any

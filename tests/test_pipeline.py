@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_darima_spark.darima.arima_math import normal_ppf
-from python_darima_spark.darima.fit import fit_window_to_coef_rows
+from python_darima_spark.darima.fit import fit_window_to_coef_rows, fit_window_to_coef_vec
 from python_darima_spark.darima.pipeline import (
     DarimaConfig,
     combine_coefs,
@@ -156,6 +156,24 @@ def test_mean_combine_is_average(spark, cfg):
     got = combined.set_index("coef")["value"]
     for k in manual.index:
         assert got[k] == pytest.approx(manual[k], rel=1e-9)
+
+
+def test_presplit_frame_keeps_its_windows(spark, cfg):
+    """A frame that already carries ``window_id`` is fitted window by
+    window as given — the way to run a split other than the default
+    contiguous one."""
+    y = _ar1(400)
+    sdf = split_series(spark.createDataFrame(_series_pdf(y)), 2, strategy="roundrobin")
+    got = darima(sdf, cfg).coefs.toPandas().set_index("coef")["value"]
+    # round robin numbers rows from 1 in ts order and takes row % 2
+    kw = dict(m=1, tol=30, max_p=3, max_q=0, max_P=0)
+    want = np.mean(
+        [fit_window_to_coef_vec(w, **kw) for w in (y[1::2], y[0::2])], axis=0
+    )
+    names = ["beta0", "beta1"] + [f"ar{i}" for i in range(1, 31)] + ["sigma2"]
+    assert len(got) == len(names)
+    for k, v in zip(names, want):
+        assert got[k] == pytest.approx(v, rel=1e-9, abs=1e-12), k
 
 
 def test_dlsa_combine_weighting(spark):
