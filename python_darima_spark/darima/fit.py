@@ -32,6 +32,7 @@ import numpy as np
 
 from python_darima_spark.darima.arima_math import DEFAULT_TOL, sarima_to_ar
 
+
 def _acf1(x: np.ndarray) -> float:
     x = x - x.mean()
     denom = float(np.dot(x, x))
@@ -271,7 +272,7 @@ def _candidate(
 
 
 def _aicc(cand: dict) -> float:
-    """AICc from a _fit_orders candidate — the information criterion
+    """AICc from a _candidate result — the information criterion
     forecast::auto.arima defaults to (ic="aicc")."""
     k = cand["beta"].size + 1 if cand["beta"].size else 1
     n = cand["n_eff"]

@@ -86,6 +86,10 @@ def fit_windows(
     (auto_arima.R:62-65,109-113) plus an ``n_obs`` row carrying the
     window's observation count for DLSA normalization.
 
+    A ``series_df`` that already has ``window_id`` keeps its split (e.g.
+    ``split_series(df, k, strategy="roundrobin")``); otherwise windows are
+    ``split_series``' contiguous ones.
+
     Shape (round 3): each window is packed to ONE row carrying its
     ts-sorted y array by a codegen'd JVM aggregate
     (``array_sort(collect_list(struct(ts, y)))``), the numpy fit runs in a
