@@ -13,14 +13,16 @@ the hot path. Scale notes per operator:
                via pigeonhole banding on 16-bit chunks, then exact Hamming
                check with xor+bit_count.
 
+Every Jaccard-verified pair (MinHash, its probe shapes, verified SimHash)
+is checked exactly on sorted xxhash64 shingle-gid arrays from
+:func:`doc_shingle_gids`; a NULL text has no shingles and never pairs.
+
 ANSI-mode note: Spark 4 throws on bigint overflow, so the universal-hash
 family (a·h+b) mod p keeps h < 2³² and a,b < 2³⁰ — products stay < 2⁶²
 and never overflow, whatever spark.sql.ansi.enabled is set to.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -56,7 +58,12 @@ def dedup_exact(
     id alone, so when the keeper-id set fits the broadcast threshold
     (8 B/doc) the full-width rows never cross an exchange; when it does
     not, the semi-join shuffles rows once by id, still never by the
-    64-char digest with text in tow."""
+    64-char digest with text in tow.
+
+    ``keep`` is ``"min"`` or ``"max"``; any other value raises
+    ``ValueError``."""
+    if keep not in ("min", "max"):
+        raise ValueError(f"keep must be 'min' or 'max', got {keep!r}")
     agg_fn = F.min if keep == "min" else F.max
     digest = F.sha2(F.col(text_col), 256)
     keeper_ids = (
@@ -87,54 +94,31 @@ def char_shingles(text_col: str, k: int = 5):
     )
 
 
-def _shingle_gid(text_col: str, bin_col: str, ascii_col: str, k: int):
-    """xxhash64 of the k-char shingle at exploded (1-based) offset
-    ``_i`` — byte-sliced from the precomputed binary column for
-    all-ASCII rows (O(1) per shingle; xxhash64 hashes raw bytes, so
-    BINARY and STRING inputs with the same bytes hash identically),
-    char-sliced otherwise (UTF-8 ``substring`` scans from the string
-    head — O(offset) per shingle, O(len²) per doc, the r10 profile's
-    dominant dedup-stage cost)."""
-    return F.when(
-        F.col(ascii_col),
-        F.xxhash64(F.expr(f"substring({bin_col}, _i, {k})")),
-    ).otherwise(F.xxhash64(F.expr(f"substring({text_col}, _i, {k})")))
-
-
-def doc_shingle_gids(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 5,
-) -> DataFrame:
-    """The SHARED corpus shingle stage: one ``(id, gid)`` row per
-    DISTINCT shingle per document, gid = replay-stable ``xxhash64`` of
-    the shingle text. Every dedup pipeline in the family starts from
-    exactly this table — MinHash signatures (``pmod(gid, P)`` is the
-    base hash), the containment dictionary (document frequency per
-    gid), and exact set verification (sorted int-gid arrays intersect
-    ~10× cheaper than 5-char-string arrays) — so a caller that computes
-    it once and persists it (queries/llm_data.py `_corpus_shingles`)
-    pays the corpus text scan + shingle explode a single time for the
-    whole family instead of once per pipeline. A 64-bit collision
-    merges one shingle pair deterministically (P ≈ n²/2⁶⁴ per doc,
-    ~1e-13 at 2k shingles/doc — the same accepted bound as the
-    containment dictionary).
+def _shingle_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """The one shingler: ``(id, gid)`` per k-char shingle OFFSET, not
+    distinct; gid is the replay-stable ``xxhash64`` of the shingle. NULL
+    texts are dropped: ``greatest(length(NULL) − (k−1), 1)`` would give
+    each one shingle, ``xxhash64(NULL)``, so null docs would pair.
 
     Shape: explode the OFFSET sequence and substring per row — NOT
     ``array_distinct(transform(...))``: Spark interprets higher-order
-    lambdas row-at-a-time instead of codegen (the minhash_signatures
-    measurement, 8×), and the first cut of this stage shipped with the
-    HOF shape and doubled the near-dup family's wall at sf0.01 (probe
-    4.0 s → 8.7 s) before the round-8 re-audit caught it. Per-doc
-    distinctness comes from the (id, gid) hash aggregate — partial
-    aggregation dedups map-side, no per-row array ever materializes."""
+    lambdas row-at-a-time instead of codegen (measured 8×), and the
+    first cut of the shared stage shipped with the HOF shape and doubled
+    the near-dup family's wall at sf0.01 (probe 4.0 s → 8.7 s) before
+    the round-8 re-audit caught it. ``fan_out`` runs BEFORE the
+    ~300×-row explode: full-core shingling, and the consumer's
+    groupBy(id) reuses this partitioning (no second exchange). All-ASCII
+    rows hash a slice of the binary column, O(1) per shingle, as in
+    :func:`char_shingles` (xxhash64 hashes raw bytes, so BINARY and
+    STRING inputs with the same bytes hash identically)."""
     offsets = F.sequence(
-        F.lit(1),
-        F.greatest(F.length(text_col) - (shingle_k - 1), F.lit(1)),
+        F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))
     )
+    gid = F.when(
+        F.col("_a"), F.xxhash64(F.expr(f"substring(_b, _i, {k})"))
+    ).otherwise(F.xxhash64(F.expr(f"substring({text_col}, _i, {k})")))
     return (
-        fan_out(df, id_col)
+        fan_out(df.where(F.col(text_col).isNotNull()), id_col)
         .select(
             F.col(id_col),
             F.col(text_col),
@@ -144,12 +128,34 @@ def doc_shingle_gids(
             ).alias("_a"),
             F.explode(offsets).alias("_i"),
         )
-        .select(
-            id_col,
-            _shingle_gid(text_col, "_b", "_a", shingle_k).alias("gid"),
-        )
-        .distinct()
+        .select(id_col, gid.alias("gid"))
     )
+
+
+def doc_shingle_gids(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 5,
+) -> DataFrame:
+    """The SHARED corpus shingle stage: one ``(id, gid)`` row per
+    DISTINCT shingle per document (NULL texts have none), gid =
+    replay-stable ``xxhash64`` of the shingle text. Every dedup pipeline
+    in the family starts from exactly this table — MinHash signatures
+    (``pmod(gid, P)`` is the base hash), the containment dictionary
+    (document frequency per gid), and exact set verification (sorted
+    int-gid arrays intersect ~10× cheaper than 5-char-string arrays) —
+    so a caller that computes it once and persists it
+    (queries/llm_data.py `_corpus_shingles`) pays the corpus text scan +
+    shingle explode a single time for the whole family instead of once
+    per pipeline. A 64-bit collision merges one shingle pair
+    deterministically (P ≈ n²/2⁶⁴ per doc, ~1e-13 at 2k shingles/doc —
+    the same accepted bound as the containment dictionary).
+
+    Per-doc distinctness comes from the (id, gid) hash aggregate —
+    partial aggregation dedups map-side, no per-row array ever
+    materializes."""
+    return _shingle_rows(df, text_col, id_col, shingle_k).distinct()
 
 
 def minhash_signatures(
@@ -163,9 +169,8 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature → (id_col, sig: array<bigint>).
 
-    Shape matters for speed here: shingles are EXPLODED (offset sequence +
-    substring, no higher-order functions — Spark interprets HOF lambdas,
-    it does not codegen them; measured 8× slower) and each of the
+    Shape matters for speed here: shingles are EXPLODED by
+    :func:`_shingle_rows` (no higher-order functions) and each of the
     ``num_hashes`` minima is a plain codegen'd ``min`` aggregate with
     map-side partial aggregation, so the only shuffle carries one
     ``num_hashes``-wide partial row per (task, doc). Duplicate shingles
@@ -180,34 +185,10 @@ def minhash_signatures(
     rng = np.random.default_rng(seed)
     a = rng.integers(1, 2**30, size=num_hashes)
     b = rng.integers(0, 2**30, size=num_hashes)
-    if shingle_gids is not None:
-        base = shingle_gids.select(
-            id_col, F.pmod("gid", F.lit(_MERSENNE_P)).alias("_h")
-        )
-    else:
-        offsets = F.sequence(
-            F.lit(1),
-            F.greatest(F.length(text_col) - (shingle_k - 1), F.lit(1)),
-        )
-        # fan_out BEFORE the ~300×-row explode: full-core shingling, and
-        # the groupBy(id) below reuses this partitioning (no second
-        # exchange).
-        df = fan_out(df, id_col)
-        base = df.select(
-            F.col(id_col),
-            F.col(text_col),
-            F.col(text_col).cast("binary").alias("_b"),
-            (
-                F.length(text_col) == F.expr(f"octet_length({text_col})")
-            ).alias("_a"),
-            F.explode(offsets).alias("_i"),
-        ).select(
-            id_col,
-            F.pmod(
-                _shingle_gid(text_col, "_b", "_a", shingle_k),
-                F.lit(_MERSENNE_P),
-            ).alias("_h"),
-        )
+    rows = shingle_gids
+    if rows is None:
+        rows = _shingle_rows(df, text_col, id_col, shingle_k)
+    base = rows.select(id_col, F.pmod("gid", F.lit(_MERSENNE_P)).alias("_h"))
     mins = [
         F.min(
             F.pmod(
@@ -224,6 +205,15 @@ def minhash_signatures(
             id_col, F.array(*[f"_mh{i}" for i in range(num_hashes)]).alias("sig")
         )
     )
+
+
+def _rows_per_band(num_hashes: int, num_bands: int) -> int:
+    """Signature rows per LSH band. More bands than hashes would make
+    every band an empty slice (every doc pair a candidate), and a
+    remainder would leave the trailing hashes out of every band."""
+    if num_bands < 1 or num_hashes < num_bands or num_hashes % num_bands:
+        raise ValueError(f"num_bands={num_bands} must divide num_hashes={num_hashes}")
+    return num_hashes // num_bands
 
 
 def band_hashes(
@@ -299,6 +289,89 @@ def minhash_candidate_pairs(
     )
 
 
+def _estimate_prefilter(
+    cands: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    id_col: str,
+    threshold: float,
+    num_hashes: int,
+) -> DataFrame:
+    """The candidate id pairs (``cands``' two columns) whose
+    signature-estimated Jaccard — matching minhashes / num_hashes — is
+    at least ``threshold − 0.2``: ≈3.5σ below the target for 64 hashes,
+    so true pairs survive while the LSH false positives never reach
+    exact verification.
+
+    Survivors are byte-tiny, so they are repartitioned BY NUMBER: AQE's
+    byte-based coalescing ran the CPU-heavy verify tail on 6 of 32 cores
+    (34 s vs 14 s at sf1; REPARTITION_BY_NUM is exempt). The eager
+    checkpoint stops the verify's up-to-three reads each re-running the
+    sig→band→prefilter prefix (4 s of the 5.5 s sf0.01 wall, round 8),
+    and drops the signatures from the lineage: callers may release them."""
+    a, b = cands.columns
+    est_match = F.aggregate(
+        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    pre = (
+        cands.join(
+            sig_a.select(F.col(id_col).alias(a), F.col("sig").alias("_sa")),
+            on=a,
+        )
+        .join(
+            sig_b.select(F.col(id_col).alias(b), F.col("sig").alias("_sb")),
+            on=b,
+        )
+        .where(est_match / F.lit(float(num_hashes)) >= F.lit(threshold - 0.2))
+        .select(a, b)
+        .repartition(shuffle_width(cands.sparkSession))
+    )
+    return pre.localCheckpoint(eager=True)
+
+
+def _gid_arrays(gids: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
+    """``(id, _sh)``: the shingle set of each doc in ``ids`` as a sorted
+    gid array — a semi-join, so never built for the whole corpus."""
+    return (
+        gids.join(ids, id_col, "left_semi")
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_list("gid")).alias("_sh"))
+    )
+
+
+def _jaccard_verify(
+    pairs: DataFrame,
+    arr_a: DataFrame,
+    arr_b: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The one exact-verify tail: join each side of the id pairs
+    (``pairs``' two columns) to its :func:`_gid_arrays` table and keep
+    shingle Jaccard ≥ ``threshold``, rounded to 6 places. Int arrays
+    intersect ~10× cheaper than 5-char-string arrays (the
+    containment_pairs measurement); gid Jaccard equals string Jaccard up
+    to 64-bit collisions (~1e-13/doc). A doc without shingles (NULL
+    text) joins nothing, so it never pairs."""
+    a, b = pairs.columns
+    joined = pairs.join(
+        arr_a.select(F.col(id_col).alias(a), F.col("_sh").alias("_sh_a")),
+        on=a,
+    ).join(
+        arr_b.select(F.col(id_col).alias(b), F.col("_sh").alias("_sh_b")),
+        on=b,
+    )
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
+    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
+    return (
+        joined.withColumn("jaccard", inter / union)
+        .where(F.col("jaccard") >= threshold)
+        .select(a, b, F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -322,21 +395,12 @@ def minhash_near_duplicates(
       estimate-join sides would otherwise recompute the full
       scan→shingle→hash subtree (2× faster overall; on a real cluster
       this is where you'd checkpoint to storage instead);
-    * candidates are prefiltered by the signature-estimated Jaccard
-      (matching minhashes / num_hashes, a zip_with over two cached
-      64-long arrays) at ``threshold − 0.2`` — ≈3.5σ below the target
-      for 64 hashes, so true pairs survive while the ~500× excess of
-      LSH false positives never reaches exact verification;
-    * exact shingle SETS are built ONLY for candidate docs (a semi-join
-      on the surviving pair ids), as sorted int-gid arrays — int
-      intersects run ~10× cheaper than 5-char-string intersects (the
-      containment_pairs measurement), and with a family-shared
-      ``shingle_gids`` stage the verify pays no text re-shingle at all.
-      Set-Jaccard over gids equals string Jaccard up to 64-bit
-      collisions (~1e-13/doc, the containment dictionary's accepted
-      bound).
+    * the Jaccard-estimate prefilter (:func:`_estimate_prefilter`) keeps
+      the ~500× excess of LSH false positives from exact verification,
+      which builds sorted gid arrays ONLY for candidate docs, from the
+      gid table the signatures use — no text re-shingle.
     """
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     # inline gids feed TWO consumers (the signature aggregate and the
     # exact-verify arrays) — unpersisted, each replays the corpus
     # scan + shingle explode (the dominant stage; measured ~2 s/replay
@@ -356,63 +420,14 @@ def minhash_near_duplicates(
     cands = minhash_candidate_pairs(
         sigs, id_col, num_bands, rows_per_band, max_bucket_size
     )
-    est_match = F.aggregate(
-        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    pre = (
-        cands.join(
-            sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sa")),
-            on="id_a",
-        )
-        .join(
-            sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sb")),
-            on="id_b",
-        )
-        .where(
-            est_match / F.lit(float(num_hashes)) >= F.lit(threshold - 0.2)
-        )
-        .select("id_a", "id_b")
-    )
-    # repartition-by-number before the CPU-heavy verify tail: the
-    # survivor pairs are byte-tiny, AQE's byte-based coalescing would
-    # shrink this exchange to a few partitions and run the per-pair
-    # intersects on a fraction of the cores (the _probe_verified_pairs
-    # round-6 finding; REPARTITION_BY_NUM is exempt from coalescing).
-    # Eagerly checkpointed: the verify tail reads `pre` three times
-    # (both cand_ids legs + the pair join), and without materialization
-    # each read re-runs the whole sig→band→prefilter prefix — measured
-    # 4 s of the 5.5 s sf0.01 wall before the round-8 re-audit.
-    pre = pre.repartition(shuffle_width(df.sparkSession)).localCheckpoint(
-        eager=True
-    )
-    # exact verify from sorted int-gid arrays, built only for docs that
-    # appear in a surviving pair (semi-join) — never for the corpus
+    pre = _estimate_prefilter(cands, sigs, sigs, id_col, threshold, num_hashes)
     cand_ids = (
         pre.select(F.col("id_a").alias(id_col))
         .union(pre.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    arr = (
-        gids.join(cand_ids, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("gid")).alias("_sh"))
-    )
-    joined = pre.join(
-        arr.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a")),
-        on="id_a",
-    ).join(
-        arr.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b")),
-        on="id_b",
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    arr = _gid_arrays(gids, cand_ids, id_col)
+    return _jaccard_verify(pre, arr, arr, id_col, threshold)
 
 
 def minhash_incremental(
@@ -441,8 +456,8 @@ def minhash_incremental(
     table of (band_id, band_hash, id) bucketed by band key — signatures
     are computed once at ingest and appended by
     :func:`minhash_index_append`, so each increment pays only its own
-    shingling. Candidates are estimate-prefiltered and exact-verified
-    from the texts, so every EMITTED pair is a true Jaccard-≥-threshold
+    shingling. Candidates are estimate-prefiltered and exact-verified on
+    their shingle sets, so every EMITTED pair is a true Jaccard-≥-threshold
     pair (no false positives ever). Recall is w.h.p. for pairs well
     above the threshold, not certain: a pair at similarity s collides
     in ≥1 of b bands with probability 1−(1−s^r)^b (≈64% at s=0.5 with
@@ -454,7 +469,7 @@ def minhash_incremental(
     fixture pairs sit at j ≥ 0.8, where missed-pair probability is
     < 1e-3 per pair).
     """
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     # NOTE (round 10): wiring the family-shared ``shingle_gids`` stage
     # through here (as minhash_probe_index does) was tried and MEASURED
     # SLOWER (4.6 vs 3.3 s isolated at sf0.1): the new/index slices are
@@ -468,19 +483,10 @@ def minhash_incremental(
     sig_idx = minhash_signatures(
         index_df, text_col, id_col, num_hashes, shingle_k, seed
     ).persist()
-    cands = (
-        band_hashes(sig_new, id_col, num_bands, rows_per_band)
-        .withColumnRenamed(id_col, "id_new")
-        .join(
-            band_hashes(sig_idx, id_col, num_bands, rows_per_band)
-            .withColumnRenamed(id_col, "id_old"),
-            ["band_id", "band_hash"],
-        )
-        .select("id_new", "id_old")
-        .distinct()
-    )
     result = _probe_verified_pairs(
-        cands, sig_new, sig_idx, new_df, index_df,
+        band_hashes(sig_new, id_col, num_bands, rows_per_band),
+        band_hashes(sig_idx, id_col, num_bands, rows_per_band),
+        sig_new, sig_idx, new_df, index_df,
         text_col, id_col, threshold, num_hashes, shingle_k,
     )
     sig_new.unpersist()
@@ -489,11 +495,12 @@ def minhash_incremental(
 
 
 def _probe_verified_pairs(
-    cands: DataFrame,
+    bands_new: DataFrame,
+    bands_idx: DataFrame,
     sig_new: DataFrame,
     sig_idx: DataFrame,
     new_df: DataFrame,
-    old_texts: DataFrame,
+    old_df: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float,
@@ -501,100 +508,33 @@ def _probe_verified_pairs(
     shingle_k: int,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared tail of the incremental probe shapes: estimate-prefilter
-    candidate (id_new, id_old) pairs on their signatures, then
-    exact-verify — from sorted int-gid arrays when the family-shared
-    ``shingle_gids`` stage is supplied (must cover both batch and
-    corpus ids; no text re-shingle, ~10× cheaper intersects), else from
-    the texts. Eager-materializes the (small) verified set so callers
-    can release their cached signature tables immediately (a lazy
-    return would leak cache entries per invocation)."""
-    est_match = F.aggregate(
-        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    pre = (
-        cands.join(
-            sig_new.select(F.col(id_col).alias("id_new"), F.col("sig").alias("_sa")),
-            on="id_new",
-        )
-        .join(
-            sig_idx.select(F.col(id_col).alias("id_old"), F.col("sig").alias("_sb")),
-            on="id_old",
-        )
-        .where(est_match / F.lit(float(num_hashes)) >= F.lit(threshold - 0.2))
+    """Shared tail of the incremental probe shapes: join the new batch's
+    band keys to the index's (in memory or the persisted table) for
+    ``(id_new, id_old)`` candidates, estimate-prefilter, exact-verify.
+    Gids come from ``shingle_gids`` (covering batch and corpus) if given,
+    else from the candidate docs' texts; each side gets its own array
+    table, so batch and corpus ids never mix."""
+    cands = (
+        bands_new.withColumnRenamed(id_col, "id_new")
+        .join(bands_idx.withColumnRenamed(id_col, "id_old"), ["band_id", "band_hash"])
         .select("id_new", "id_old")
+        .distinct()
     )
-    # materialize + explicitly widen the survivor set before the verify
-    # joins: the pairs are byte-TINY but the per-pair shingling below is
-    # CPU-heavy, and inside one fused plan AQE's byte-based coalescing
-    # shrank this boundary to ~6 partitions — the verify tail then ran
-    # on 6 of 32 cores (measured 34 s vs 14 s at sf1). persist breaks
-    # the fused re-plan; repartition-by-number is exempt from AQE
-    # coalescing, so the tail keeps full width.
-    spark = pre.sparkSession
-    tgt = shuffle_width(spark)
-    pre = pre.repartition(tgt).persist()
-    if shingle_gids is not None:
-        new_ids = pre.select(F.col("id_new").alias(id_col)).distinct()
-        old_ids = pre.select(F.col("id_old").alias(id_col)).distinct()
-        arr_new = (
-            shingle_gids.join(new_ids, id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.sort_array(F.collect_list("gid")).alias("_sh_a"))
-            .withColumnRenamed(id_col, "id_new")
-        )
-        arr_old = (
-            shingle_gids.join(old_ids, id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.sort_array(F.collect_list("gid")).alias("_sh_b"))
-            .withColumnRenamed(id_col, "id_old")
-        )
-        joined = pre.join(arr_new, "id_new").join(arr_old, "id_old")
-    else:
-        # ensure_parallelism on the TEXT sides: the survivor pair set is
-        # small so AQE broadcasts it, and then the per-pair shingling +
-        # intersect work runs at the text table's SCAN partitioning — a
-        # compact parquet corpus scans as ~6 splits and the verify stage
-        # crawled on 6 cores (round-6 sf1 profile; same scan-parallelism
-        # rule as the index reads above)
-        joined = (
-            pre.join(
-                ensure_parallelism(
-                    new_df.select(
-                        F.col(id_col).alias("id_new"),
-                        F.col(text_col).alias("_txt_a"),
-                    )
-                ),
-                on="id_new",
+    pre = _estimate_prefilter(cands, sig_new, sig_idx, id_col, threshold, num_hashes)
+    arrs = []
+    for docs, side in ((new_df, "id_new"), (old_df, "id_old")):
+        # broadcast: the planner cannot see the size of these answer-sized
+        # ids through the checkpoint, so it shuffled the whole text or gid
+        # table and added a runtime bloom-filter scan. No distinct: a
+        # semi-join needs none, and it costs a shuffle stage.
+        ids = F.broadcast(pre.select(F.col(side).alias(id_col)))
+        gids = shingle_gids
+        if gids is None:
+            gids = doc_shingle_gids(
+                docs.join(ids, id_col, "left_semi"), text_col, id_col, shingle_k
             )
-            .join(
-                ensure_parallelism(
-                    old_texts.select(
-                        F.col(id_col).alias("id_old"),
-                        F.col(text_col).alias("_txt_b"),
-                    )
-                ),
-                on="id_old",
-            )
-            .withColumn(
-                "_sh_a", F.array_distinct(char_shingles("_txt_a", shingle_k))
-            )
-            .withColumn(
-                "_sh_b", F.array_distinct(char_shingles("_txt_b", shingle_k))
-            )
-        )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
-    result = (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_new", "id_old", F.round("jaccard", 6).alias("jaccard"))
-        .localCheckpoint(eager=True)
-    )
-    pre.unpersist()
-    return result
+        arrs.append(_gid_arrays(gids, ids, id_col))
+    return _jaccard_verify(pre, *arrs, id_col, threshold)
 
 
 def minhash_index_append(
@@ -639,15 +579,13 @@ def minhash_index_append(
     invisible to parquet scans — so the read path stays identical to
     untagged appends (flat layout; the ``ingest=<tag>`` partition-dir
     alternative measured ~2.5× worse probe parallelism at sf1)."""
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     sig = minhash_signatures(
         batch_df, text_col, id_col, num_hashes, shingle_k, seed,
         # a family-shared stage covers the whole corpus; this ingest
         # signs only ITS batch (semi-join on the batch ids)
         shingle_gids=(
-            shingle_gids.join(
-                batch_df.select(id_col), id_col, "left_semi"
-            )
+            shingle_gids.join(batch_df.select(id_col), id_col, "left_semi")
             if shingle_gids is not None
             else None
         ),
@@ -748,21 +686,20 @@ def minhash_probe_index(
     batch N, probe batch N+1 against everything ingested so far, append
     batch N+1, … Cost per ingest is O(|new|·bands) probe rows against
     the bucketed bands table + exact verification of the surviving
-    candidates; the corpus is touched only by id for candidate texts
-    (a semi-join-sized read, never a re-shingle). ``corpus_df`` must
+    candidates; the corpus is touched only by id — without
+    ``shingle_gids`` only the candidate docs' texts are shingled for
+    the exact verify, never the whole corpus. ``corpus_df`` must
     contain the texts of every id previously appended (``seed`` /
     ``num_hashes`` / ``shingle_k`` must match the index's). Same
     emitted-pair contract as :func:`minhash_incremental`: no false
     positives ever; recall w.h.p. by the banding bound documented
     there."""
     spark = new_df.sparkSession
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     sig_new = minhash_signatures(
         new_df, text_col, id_col, num_hashes, shingle_k, seed,
         shingle_gids=(
-            shingle_gids.join(
-                new_df.select(id_col), id_col, "left_semi"
-            )
+            shingle_gids.join(new_df.select(id_col), id_col, "left_semi")
             if shingle_gids is not None
             else None
         ),
@@ -773,22 +710,11 @@ def minhash_probe_index(
     # the expensive per-pair stages INHERIT that scan parallelism — a
     # measured 2.5× swing at sf1 depending on the file-split lottery.
     # Forcing the skinny index tables up to the shuffle width pins it.
-    bands_idx = ensure_parallelism(
-        spark.read.parquet(f"{index_path}/bands")
-    )
-    cands = (
-        band_hashes(sig_new, id_col, num_bands, rows_per_band)
-        .withColumnRenamed(id_col, "id_new")
-        .join(
-            bands_idx.withColumnRenamed(id_col, "id_old"),
-            ["band_id", "band_hash"],
-        )
-        .select("id_new", "id_old")
-        .distinct()
-    )
+    bands_idx = ensure_parallelism(spark.read.parquet(f"{index_path}/bands"))
     sig_idx = ensure_parallelism(spark.read.parquet(f"{index_path}/sigs"))
     result = _probe_verified_pairs(
-        cands, sig_new, sig_idx, new_df, corpus_df,
+        band_hashes(sig_new, id_col, num_bands, rows_per_band), bands_idx,
+        sig_new, sig_idx, new_df, corpus_df,
         text_col, id_col, threshold, num_hashes, shingle_k,
         shingle_gids=shingle_gids,
     )
@@ -1033,31 +959,20 @@ def simhash_verified_pairs(
     cands = simhash_near_duplicates(
         df, text_col, id_col, max_hamming, tokenizer=f"shingle{shingle_k}"
     ).select("id_a", "id_b")
-    text = df.select(F.col(id_col), F.col(text_col))
-    joined = (
-        cands.join(
-            text.select(
-                F.col(id_col).alias("id_a"), F.col(text_col).alias("_txt_a")
-            ),
-            on="id_a",
+    # checkpointed: the verify reads the pairs three times, each read
+    # re-running the fingerprints + chunk self-join (2.5× the sf0.1 wall)
+    cands = cands.localCheckpoint(eager=True)
+    # broadcast and not distinct, as in _probe_verified_pairs
+    ids = F.broadcast(
+        cands.select(F.col("id_a").alias(id_col)).union(
+            cands.select(F.col("id_b").alias(id_col))
         )
-        .join(
-            text.select(
-                F.col(id_col).alias("id_b"), F.col(text_col).alias("_txt_b")
-            ),
-            on="id_b",
-        )
-        # exact shingle sets only for candidates, never for all docs
-        .withColumn("_sh_a", F.array_distinct(char_shingles("_txt_a", shingle_k)))
-        .withColumn("_sh_b", F.array_distinct(char_shingles("_txt_b", shingle_k)))
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    gids = doc_shingle_gids(
+        df.join(ids, id_col, "left_semi"), text_col, id_col, shingle_k
     )
+    arr = _gid_arrays(gids, ids, id_col)
+    return _jaccard_verify(cands, arr, arr, id_col, threshold)
 
 
 def containment_pairs(
@@ -1165,7 +1080,7 @@ def containment_pairs(
         .where(F.col("_hits") >= F.col("_need"))
         .select("_pid", "_iid")
         # repartition-by-number before the verify tail (the
-        # _probe_verified_pairs round-6 finding): survivors are
+        # _estimate_prefilter round-6 finding): survivors are
         # byte-tiny, and AQE's byte-based coalescing would otherwise
         # run the per-pair array intersects on a few partitions
         .repartition(shuffle_width(df.sparkSession))

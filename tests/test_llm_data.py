@@ -152,6 +152,89 @@ def test_minhash_index_roundtrip_accumulates(spark, docs_with_dups, tmp_path):
     assert (9103, 0) in got2 and (9104, 1) in got2
 
 
+def test_probe_verify_same_from_shared_gids_or_texts(
+    spark, docs_with_dups, tmp_path
+):
+    """The probe's exact verify builds its gid arrays either from a
+    caller's shared shingle stage or from the candidate docs' texts; both
+    sources must give the same pairs, and so must the in-memory probe."""
+    from python_darima_spark.operators.dedup import (
+        doc_shingle_gids,
+        minhash_incremental,
+        minhash_index_append,
+        minhash_probe_index,
+    )
+
+    batch = docs_with_dups.where("doc_id >= 9000")
+    corpus = docs_with_dups.where("doc_id < 9000")
+    idx = str(tmp_path / "mh_index")
+    minhash_index_append(corpus, idx)
+    gids = doc_shingle_gids(corpus.unionByName(batch))
+
+    def rows(df):
+        return sorted(map(tuple, df.select("id_new", "id_old", "jaccard").collect()))
+
+    from_texts = rows(minhash_probe_index(batch, idx, corpus, threshold=0.5))
+    from_stage = rows(
+        minhash_probe_index(batch, idx, corpus, threshold=0.5, shingle_gids=gids)
+    )
+    in_memory = rows(minhash_incremental(batch, corpus, threshold=0.5))
+    assert {(n, o) for n, o, _ in from_texts} >= {(9001, 0), (9002, 1)}
+    assert from_stage == from_texts
+    assert in_memory == from_texts
+
+
+def test_null_text_docs_never_pair(spark):
+    """A NULL text has no shingle set: two null docs used to come out as
+    an exact (jaccard 1.0) near-duplicate pair."""
+    from python_darima_spark.operators.dedup import (
+        minhash_incremental,
+        simhash_verified_pairs,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, text), (4, text + " x")],
+        "doc_id long, text string",
+    )
+    for pairs in (
+        minhash_near_duplicates(df, threshold=0.5),
+        simhash_verified_pairs(df, threshold=0.5),
+    ):
+        got = {(r.id_a, r.id_b) for r in pairs.collect()}
+        assert got == {(3, 4)}
+    new, old = df.where("doc_id % 2 = 0"), df.where("doc_id % 2 = 1")
+    got = {
+        (r.id_new, r.id_old)
+        for r in minhash_incremental(new, old, threshold=0.5).collect()
+    }
+    assert got == {(4, 3)}
+
+
+@pytest.mark.parametrize("num_hashes,num_bands", [(8, 16), (64, 10), (64, 0)])
+def test_banding_parameters_checked(spark, docs_with_dups, num_hashes, num_bands):
+    """More bands than hashes made every doc pair a candidate, and a
+    remainder silently dropped the trailing hashes; both now raise."""
+    from python_darima_spark.operators.dedup import minhash_incremental
+
+    with pytest.raises(ValueError, match="num_bands"):
+        minhash_near_duplicates(
+            docs_with_dups, num_hashes=num_hashes, num_bands=num_bands
+        )
+    with pytest.raises(ValueError, match="num_bands"):
+        minhash_incremental(
+            docs_with_dups, docs_with_dups,
+            num_hashes=num_hashes, num_bands=num_bands,
+        )
+
+
+def test_dedup_exact_keep_checked(spark):
+    df = spark.createDataFrame([(1, "x"), (2, "x")], "doc_id long, text string")
+    assert [r.doc_id for r in dedup_exact(df, keep="max").collect()] == [2]
+    with pytest.raises(ValueError, match="keep"):
+        dedup_exact(df, keep="first")
+
+
 def test_index_append_tagged_replay_is_idempotent(spark, tmp_path, docs_with_dups):
     """At-least-once replay safety (round-5 ADVICE): re-appending the
     SAME logical batch under the same ingest_tag must be a no-op — no
