@@ -13,4 +13,4 @@ from python_darima_spark.darima.arima_math import (  # noqa: F401
     normal_ppf,
     sarima_to_ar,
 )
-from python_darima_spark.darima.fit import auto_ar_fit, fit_window_to_coef_rows  # noqa: F401
+from python_darima_spark.darima.fit import auto_ar_fit, coef_names  # noqa: F401

@@ -1,25 +1,27 @@
 """Pure-numpy ARIMA math: SARIMA→AR linearization, ψ-weights, quantiles.
 
+Every recursive step of the engine is one linear recurrence,
+:func:`ar_recursion` (``y_j = x_j + Σ_k c_k·y_{j−k}``): the power-series
+division behind :func:`sarima_to_ar`, the ψ-weights of :func:`ar_to_ma`,
+the holdout forecast that picks (d, D) and the final h-step forecast.
+
 Behavioral parity targets (reference files, studied for semantics only):
 
 * ``sarima_to_ar``     ~ /root/reference/auto_arima.R:7-67 (``ar_coefficients``)
 * ``ar_to_ma``         ~ /root/reference/py_handlers/utils.py:39-55 — the
   reference recursion never seeds ψ0=1 so it returns all zeros; we implement
-  the correct MA(∞) recursion by default and keep ``compat=True`` for the
-  literal (zeros) behavior.
+  the correct MA(∞) recursion.
 * ``normal_ppf``       ~ /root/reference/py_handlers/utils.py:4-21 (bisection
   over erf; we use the closed-form inverse CDF — same math).
 * ``inv_box_cox``      ~ /root/reference/py_handlers/utils.py:23-37 — the
   reference's λ∉{0,1} branches compute the *forward* transform under the
-  inverse's name; default implements the true inverse, compat reproduces.
+  inverse's name; we implement the true inverse.
 
 All functions are driver/UDF-side scalar math on ≤O(tol) vectors — no Spark
 interaction. ``tol`` defaults to 2000 per /root/reference/auto_arima.R:71.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 
@@ -30,8 +32,6 @@ DEFAULT_TOL = 2000
 # the final fit), and the arange allocation was a measurable slice of the
 # r11 fit profile (values are identical: same dtype, same contents)
 _IDX_CACHE: dict[int, np.ndarray] = {}
-
-_UNIT_POLY = np.array([1.0])
 
 
 def _polymul(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -68,6 +68,38 @@ def _seasonal_poly(coefs: np.ndarray, m: int, sign: float) -> np.ndarray:
     for i, c in enumerate(coefs, start=1):
         out[m * i] = sign * c
     return out
+
+
+def ar_recursion(x, c, init=()) -> np.ndarray:
+    """The one linear recurrence of the engine: y with
+    ``y_j = x_j + Σ_{k=1..K} c_k·y_{j−k}`` over the history ``init ++ y``,
+    where K = min(len(c), len(init) + j).
+
+    Each step is ``x_j + c[:K] · (y_{j−1}, …, y_{j−K})``: one dot product
+    over a reversed view of the history, so every caller gets the same
+    rounding."""
+    x = np.asarray(x, dtype=float)
+    c = np.atleast_1d(np.asarray(c, dtype=float))
+    if c.size == 0:
+        return x.copy()
+    init = np.asarray(init, dtype=float)
+    if c.size == 1 and init.size == 0:
+        # One lag (e.g. one MA term in sarima_to_ar): np.dot over one
+        # element is that single IEEE multiply, so Python-float arithmetic
+        # performs the identical two round-to-nearest double ops and the
+        # series is bit-identical while the per-step numpy dispatch goes
+        # away (matters at tol=2000: ~2000 loop steps per linearization).
+        c1 = float(c[0])
+        vals = x.tolist()
+        for j in range(1, len(vals)):
+            vals[j] += c1 * vals[j - 1]
+        return np.asarray(vals, dtype=float)
+    n0, K = init.size, c.size
+    buf = np.concatenate((init, np.empty(x.size)))
+    for pos, xj in enumerate(x.tolist(), n0):
+        k = K if pos >= K else pos
+        buf[pos] = xj + np.dot(c[:k], buf[pos - k : pos][::-1])
+    return buf[n0:]
 
 
 def sarima_to_ar(
@@ -121,34 +153,7 @@ def sarima_to_ar(
     # pi_j = a_j - sum_{k=1..min(j, deg b)} b_k * pi_{j-k}
     a_pad = np.zeros(tol + 1)
     a_pad[: min(a_poly.size, tol + 1)] = a_poly[: tol + 1]
-    qdeg = b_poly.size - 1
-    if qdeg == 0:
-        # b(B) = 1: the division is the identity — pi_j = a_j exactly as
-        # the general loop would copy them.
-        pi = a_pad
-    elif qdeg == 1:
-        # One MA term: the general step degenerates to the scalar
-        # recursion pi_j = a_j − b1·pi_{j−1} (np.dot over one element is
-        # that single IEEE multiply); Python-float arithmetic performs
-        # the identical two round-to-nearest double ops, so the series
-        # is bit-identical while the per-step numpy dispatch goes away
-        # (matters at tol=2000: ~2000 loop steps per linearization).
-        b1 = float(b_poly[1])
-        vals = a_pad.tolist()
-        prev = vals[0]
-        for j in range(1, tol + 1):
-            prev = vals[j] - b1 * prev
-            vals[j] = prev
-        pi = np.asarray(vals)
-    else:
-        pi = np.zeros(tol + 1)
-        pi[0] = a_pad[0]  # == 1
-        for j in range(1, tol + 1):
-            acc = a_pad[j]
-            kmax = min(j, qdeg)
-            if kmax:
-                acc -= np.dot(b_poly[1 : kmax + 1], pi[j - 1 :: -1][:kmax])
-            pi[j] = acc
+    pi = ar_recursion(a_pad, -b_poly[1:])
 
     pie = -pi[1:]  # y_t = ... + pie_i y_{t-i}
     idx = _IDX_CACHE.get(tol)
@@ -163,26 +168,13 @@ def sarima_to_ar(
     return {"beta0": float(beta0), "beta1": float(beta1), "pi": pie}
 
 
-def ar_to_ma(ar_coeffs, n: int, compat: bool = False) -> np.ndarray:
-    """ψ-weights (MA(∞) coefficients) of an AR(p) model, ψ_0..ψ_{n-1}.
-
-    Correct recursion: ψ_0 = 1, ψ_j = Σ_{k=1..min(j,p)} φ_k ψ_{j-k}.
-    ``compat=True`` reproduces the reference bug (no ψ0 seed → all zeros,
-    /root/reference/py_handlers/utils.py:39-55).
-    """
-    ar = np.atleast_1d(np.asarray(ar_coeffs, dtype=float))
-    n = int(n)
-    if compat:
-        return np.zeros(n)
-    if n <= 0:
-        return np.zeros(0)
-    psi = np.zeros(n)
-    psi[0] = 1.0
-    p = ar.size
-    for j in range(1, n):
-        kmax = min(j, p)
-        psi[j] = float(np.dot(ar[:kmax], psi[j - kmax : j][::-1]))
-    return psi
+def ar_to_ma(ar_coeffs, n: int) -> np.ndarray:
+    """ψ-weights (MA(∞) coefficients) of an AR(p) model, ψ_0..ψ_{n-1}:
+    a unit impulse through the AR recursion, ψ_0 = 1,
+    ψ_j = Σ_{k=1..min(j,p)} φ_k ψ_{j-k}."""
+    impulse = np.zeros(max(int(n), 0))
+    impulse[:1] = 1.0
+    return ar_recursion(impulse, ar_coeffs)
 
 
 def normal_ppf(q: float) -> float:
@@ -193,21 +185,9 @@ def normal_ppf(q: float) -> float:
     return NormalDist().inv_cdf(q)
 
 
-def inv_box_cox(y, lambda_: float, biasadj: bool = False, compat: bool = False):
-    """True inverse Box-Cox: exp(y) if λ=0 else (λy+1)^(1/λ).
-
-    ``compat=True`` reproduces /root/reference/py_handlers/utils.py:23-37
-    literally (its λ∉{0,1} non-biasadj branch applies the forward transform).
-    """
+def inv_box_cox(y, lambda_: float):
+    """True inverse Box-Cox: exp(y) if λ=0 else (λy+1)^(1/λ)."""
     y = np.asarray(y, dtype=float)
-    if compat:
-        if lambda_ == 0:
-            return np.exp(y)
-        if lambda_ == 1:
-            return y
-        if biasadj:
-            return (y * lambda_ + 1.0) ** (1.0 / lambda_)
-        return (y**lambda_ - 1.0) / lambda_
     if lambda_ == 0:
         return np.exp(y)
     return np.power(np.maximum(y * lambda_ + 1.0, 0.0), 1.0 / lambda_)

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from python_darima_spark.darima.arima_math import DEFAULT_TOL, sarima_to_ar
+from python_darima_spark.darima.arima_math import DEFAULT_TOL, ar_recursion, sarima_to_ar
 
 
 def _acf1(x: np.ndarray) -> float:
@@ -133,18 +133,10 @@ def select_orders_by_holdout(
     # where the fallback heuristic would have differenced seasonally
     if m > 1:
         cands += [(0, 1), (1, 1)]
-    sel_tol = tol
     tr, ho = y[:split], y[split:]
     best: tuple | None = None
-    T = split
-    p = min(sel_tol, T)
-    # one forecast buffer + one trend vector shared by every candidate
-    # (r11): the per-candidate concatenate and the two scalar trend ops
-    # per recursion step were ~15% of the holdout loop. trend[i] is the
-    # same two IEEE ops (b1·t, then +b0) the scalar code performed, just
-    # evaluated elementwise up front, so forecasts are bit-identical.
-    ext = np.empty(T + hold)
-    tvals = np.arange(T + 1, T + hold + 1, dtype=float)
+    p = min(tol, split)
+    tvals = np.arange(split + 1, n + 1, dtype=float)
     # explosive candidates (e.g. d=2 trends) legitimately overflow
     # to inf over thousands of steps — the non-finite mae below
     # rejects them, so the warning is noise in executor logs (the
@@ -156,21 +148,15 @@ def select_orders_by_holdout(
                 fit = auto_ar_fit(
                     tr, m=m, max_p=max_p, max_q=max_q, max_P=max_P,
                     max_Q=max_Q,
-                    d=d, D=D, tol=sel_tol, search=search,
+                    d=d, D=D, tol=tol, search=search,
                     max_order=max_order,
                 )
             except (ValueError, np.linalg.LinAlgError):
                 continue
-            b0, b1, pi = fit["beta0"], fit["beta1"], fit["pi"]
-            ext[:T] = tr
-            ext[T:] = 0.0
-            pi_p = pi[:p]
-            trend = b0 + b1 * tvals
-            for i in range(hold):
-                t_idx = T + i + 1
-                lags = ext[t_idx - 1 - p : t_idx - 1][::-1]
-                ext[T + i] = trend[i] + float(pi_p @ lags)
-            mae = float(np.abs(ho - ext[T:]).mean())
+            fc = ar_recursion(
+                fit["beta0"] + fit["beta1"] * tvals, fit["pi"][:p], init=tr
+            )
+            mae = float(np.abs(ho - fc).mean())
             if not np.isfinite(mae):
                 continue
             key = (mae, d + D, d)  # deterministic; prefer less differencing
@@ -390,7 +376,6 @@ def auto_ar_fit(
     d: int | None = None,
     D: int | None = None,
     tol: int = DEFAULT_TOL,
-    allow_drift: bool = True,
     search: str = "grid",
     max_order: int = 40,
 ) -> dict:
@@ -520,7 +505,7 @@ def auto_ar_fit(
     mean_level = float(intercept / denom)
     if d == 0 and D == 0:
         mu, dft = mean_level, 0.0
-    elif (d + D) == 1 and allow_drift:
+    elif (d + D) == 1:
         mu, dft = 0.0, mean_level
     else:
         mu, dft = 0.0, 0.0
@@ -535,6 +520,13 @@ def auto_ar_fit(
     }
 
 
+def coef_names(tol: int) -> list[str]:
+    """Names of :func:`fit_window_to_coef_vec`'s values, in its order: the
+    coefficient key space the combine groups by (the reference's
+    auto_arima.R:62-65,109-113)."""
+    return ["beta0", "beta1", *(f"ar{i}" for i in range(1, tol + 1)), "sigma2"]
+
+
 def fit_window_to_coef_vec(
     y: np.ndarray,
     m: int = 1,
@@ -542,12 +534,9 @@ def fit_window_to_coef_vec(
     method: str = "mean",
     **fit_kwargs,
 ) -> list[float]:
-    """Fit one window and emit the coefficient VALUES in the fixed key
-    order ``beta0, beta1, ar1..ar{tol}, sigma2`` — the payload of
-    :func:`fit_window_to_coef_rows` without materializing the name
-    strings (the fit pandas-UDF zips names back on the JVM side, so
-    building and discarding 27 tuples per window was pure overhead in
-    the r11 profile).
+    """Fit one window and emit its coefficient values in
+    :func:`coef_names` order (intercept, slope, the ``tol`` AR weights,
+    then σ²).
 
     ``method="dlsa"`` pre-scales every coefficient by T/σ² and stores that
     weight under ``sigma2`` (reference behavior at auto_arima.R:103-110);
@@ -564,21 +553,3 @@ def fit_window_to_coef_vec(
     out = vec.tolist()
     out.append(float(sigma_val))
     return out
-
-
-def fit_window_to_coef_rows(
-    y: np.ndarray,
-    m: int = 1,
-    tol: int = DEFAULT_TOL,
-    method: str = "mean",
-    **fit_kwargs,
-) -> list[tuple[str, float]]:
-    """Fit one window and emit the coefficient multiset the combine keys on:
-    ``beta0, beta1, ar1..ar{tol}, sigma2`` (key space per
-    /root/reference/auto_arima.R:62-65,109-113). Same values as
-    :func:`fit_window_to_coef_vec`, paired with their names.
-    """
-    vals = fit_window_to_coef_vec(y, m=m, tol=tol, method=method, **fit_kwargs)
-    names = ["beta0", "beta1"] + [f"ar{i}" for i in range(1, tol + 1)]
-    names.append("sigma2")
-    return list(zip(names, vals))

@@ -20,15 +20,15 @@ driver-sized data is nothing at all: even combined coefficient vectors
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from python_darima_spark.darima.arima_math import DEFAULT_TOL, ar_to_ma, normal_ppf
-from python_darima_spark.darima.fit import fit_window_to_coef_vec
+from python_darima_spark.darima.arima_math import DEFAULT_TOL, ar_recursion, ar_to_ma, normal_ppf
+from python_darima_spark.darima.fit import coef_names, fit_window_to_coef_vec
 from python_darima_spark.operators.timeseries import split_series
 
 FORECAST_SCHEMA = (
@@ -71,6 +71,11 @@ class DarimaConfig:
     levels: tuple[int, int] = (80, 95)
 
 
+def _observed(y_col: str):
+    """The one observation predicate: y is neither null nor NaN."""
+    return F.col(y_col).isNotNull() & ~F.isnan(y_col)
+
+
 def fit_windows(
     series_df: DataFrame,
     cfg: DarimaConfig,
@@ -81,10 +86,10 @@ def fit_windows(
     """Per-window (S)ARIMA fit → long coefficient rows.
 
     Replaces the reference's ``mapPartitions(MapDarima().map_arima)`` +
-    rpy2 R call (/root/reference/darima.py:157-159, 216-219). Emits the
-    coef key space ``beta0, beta1, ar1..ar{tol}, sigma2``
-    (auto_arima.R:62-65,109-113) plus an ``n_obs`` row carrying the
-    window's observation count for DLSA normalization.
+    rpy2 R call (its darima.py:157-159, 216-219). Emits one row per
+    :func:`~python_darima_spark.darima.fit.coef_names` entry plus an
+    ``n_obs`` row carrying the window's observation count for DLSA
+    normalization.
 
     A ``series_df`` that already has ``window_id`` keeps its split (e.g.
     ``split_series(df, k, strategy="roundrobin")``); otherwise windows are
@@ -101,9 +106,9 @@ def fit_windows(
     through Arrow — measured ~12 ms/window at 15k windows vs ~0.75 ms of
     actual fit math; this path moves grouping/sorting into Tungsten and
     amortizes the Python crossing, 5.7 s → ~2 s on the many-series probe.
-    Nulls: rows with null y are filtered BEFORE packing —
-    ``collect_list(struct(ts, y))`` would otherwise keep them (the struct
-    is non-null even when ``y`` is) — so ``n_obs`` counts real
+    Nulls and NaNs: rows whose y is null or NaN are filtered BEFORE
+    packing — ``collect_list(struct(ts, y))`` would otherwise keep them
+    (the struct is non-null even when ``y`` is) — so ``n_obs`` counts real
     observations and the DLSA ``T_total`` stays consistent with each
     window's NaN-dropped fit length.
     """
@@ -125,7 +130,7 @@ def fit_windows(
         if "window_id" in series_df.columns
         else split_series(series_df, cfg.num_windows, series_col, ts_col)
     )
-    packed = with_windows.where(F.col(y_col).isNotNull()).groupBy(
+    packed = with_windows.where(_observed(y_col)).groupBy(
         F.col(series_col).cast("string").alias("series_id"),
         F.col("window_id").cast("int").alias("window_id"),
     ).agg(
@@ -138,26 +143,14 @@ def fit_windows(
             lambda s: s["v"],
         ).alias("_ys")
     )
-    names = F.concat(
-        F.array(F.lit("beta0"), F.lit("beta1")),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(tol)),
-            lambda i: F.concat(F.lit("ar"), i.cast("string")),
-        ),
-        F.array(F.lit("sigma2"), F.lit("n_obs")),
-    )
+    # one string literal split into the name array (constant-folded): an
+    # array of tol + 4 separate lit() columns took ~0.8 s of driver-side
+    # plan building at tol=2000 (measured on a 4-core host)
+    names = F.split(F.lit(",".join(coef_names(tol) + ["n_obs"])), ",")
     vals = F.concat(fit_vec("_ys"), F.array(F.size("_ys").cast("double")))
-    return packed.select(
-        "series_id",
-        "window_id",
-        F.explode(F.arrays_zip(names.alias("coef"), vals.alias("value"))).alias(
-            "_e"
-        ),
-    ).select(
-        "series_id",
-        "window_id",
-        F.col("_e.coef").alias("coef"),
-        F.col("_e.value").alias("value"),
+    zipped = F.arrays_zip(names.alias("coef"), vals.alias("value"))
+    return packed.select("series_id", "window_id", F.explode(zipped).alias("_e")).select(
+        "series_id", "window_id", "_e.coef", "_e.value"
     )
 
 
@@ -203,20 +196,54 @@ def combine_coefs(coef_df: DataFrame, cfg: DarimaConfig) -> DataFrame:
     )
 
 
-def _coef_vector(pdf_coef: pd.DataFrame, tol: int) -> tuple[float, float, np.ndarray, float]:
-    """(beta0, beta1, pi[tol], sigma2) from long coef rows; missing → 0."""
-    kv = dict(zip(pdf_coef["coef"], pdf_coef["value"]))
-    pi = np.zeros(tol)
-    for k, v in kv.items():
-        if k.startswith("ar") and k[2:].isdigit():
-            idx = int(k[2:])
-            if 1 <= idx <= tol:
-                pi[idx - 1] = v
+def _coef_vector(
+    pdf_coef: pd.DataFrame, index: dict[str, int]
+) -> tuple[float, float, np.ndarray, float]:
+    """(beta0, beta1, pi[tol], sigma2) from long coef rows, placed by the
+    ``{name: position}`` of :func:`coef_names`; unknown names are ignored,
+    missing ones are 0 and a missing sigma2 is 1."""
+    vec = np.zeros(len(index))
+    vec[index["sigma2"]] = 1.0
+    for name, value in zip(pdf_coef["coef"], pdf_coef["value"]):
+        i = index.get(name)
+        if i is not None:
+            vec[i] = value
+    return float(vec[0]), float(vec[1]), vec[2:-1], float(vec[-1])
+
+
+def _per_series(
+    train_df: DataFrame,
+    coef_df: DataFrame,
+    tol: int,
+    fn,
+    schema: str,
+    series_col: str,
+    ts_col: str,
+    y_col: str,
+) -> DataFrame:
+    """Cogroup each series' combined coefficients with its observed
+    training rows and emit ``fn(sid, ts, y, beta0, beta1, pi, sigma2)``, a
+    dict of ``schema`` columns, per series (``ts``/``y`` sorted by time).
+    A series without coefficients or observations yields no rows."""
+    index = {name: i for i, name in enumerate(coef_names(tol))}
+
+    def run(pdf_coef: pd.DataFrame, pdf_train: pd.DataFrame) -> pd.DataFrame:
+        if pdf_coef.empty or pdf_train.empty:
+            return pd.DataFrame()
+        pdf_train = pdf_train.sort_values(ts_col)
+        return pd.DataFrame(
+            fn(
+                str(pdf_train[series_col].iloc[0]),
+                pdf_train[ts_col].to_numpy(),
+                pdf_train[y_col].to_numpy(dtype=float),
+                *_coef_vector(pdf_coef, index),
+            )
+        )
+
     return (
-        float(kv.get("beta0", 0.0)),
-        float(kv.get("beta1", 0.0)),
-        pi,
-        float(kv.get("sigma2", 1.0)),
+        coef_df.groupBy(series_col)
+        .cogroup(train_df.where(_observed(y_col)).groupBy(series_col))
+        .applyInPandas(run, schema)
     )
 
 
@@ -234,45 +261,23 @@ def forecast(
     Replicates /root/reference/darima.py:292-351 + 353-414 semantics
     (sequential recursion — inherently serial in h, so it runs inside one
     grouped-UDF call per series; across-series parallelism is the scale
-    axis). Standard errors use the CORRECT ψ-weight recursion (the
-    reference's ar_to_ma returns all zeros — SURVEY.md §2A R28); intervals
-    are mean ∓ z·se at the configured percent levels
-    (darima.py:371-387).
+    axis). The mean is :func:`ar_recursion` seeded with the series'
+    observed history (rows with a null or NaN y are skipped, as in the
+    fit), over its last min(tol, T) points. Standard errors use the
+    CORRECT ψ-weight recursion (the reference's ar_to_ma returns all
+    zeros — SURVEY.md §2A R28); intervals are mean ∓ z·se at the
+    configured percent levels (darima.py:371-387).
     """
     tol, levels = cfg.tol, cfg.levels
     z = {lev: normal_ppf(0.5 + lev / 200.0) for lev in levels}
 
-    def fc_one(pdf_coef: pd.DataFrame, pdf_train: pd.DataFrame) -> pd.DataFrame:
-        if pdf_coef.empty or pdf_train.empty:
-            return pd.DataFrame(
-                columns=[
-                    "series_id", "step", "ts", "mean", "se",
-                    "lo_80", "hi_80", "lo_95", "hi_95",
-                ]
-            )
-        sid = str(
-            pdf_train[series_col].iloc[0]
-            if series_col in pdf_train
-            else pdf_coef[series_col].iloc[0]
-        )
-        beta0, beta1, pi, sigma2 = _coef_vector(pdf_coef, tol)
-        pdf_train = pdf_train.sort_values(ts_col)
-        y = pdf_train[y_col].to_numpy(dtype=float)
-        ts = pdf_train[ts_col].to_numpy()
+    def fc_one(sid, ts, y, beta0, beta1, pi, sigma2) -> dict:
         T = y.size
-        p = min(tol, T)
         # step inferred from the first two points (reference darima.py:316)
         dt = (ts[1] - ts[0]) if T > 1 else np.timedelta64(1, "h")
-
-        ext = np.concatenate([y, np.zeros(h)])
-        for i in range(h):
-            t_idx = T + i + 1  # 1-based time index of the forecast point
-            lags = ext[t_idx - 1 - p : t_idx - 1][::-1]
-            ext[T + i] = beta0 + beta1 * t_idx + float(pi[:p] @ lags)
-        mean = ext[T:]
-
-        psi = ar_to_ma(pi, h)
-        se = np.sqrt(sigma2 * np.cumsum(psi**2))
+        t_idx = np.arange(T + 1, T + h + 1, dtype=float)  # 1-based time index
+        mean = ar_recursion(beta0 + beta1 * t_idx, pi[: min(tol, T)], init=y)
+        se = np.sqrt(sigma2 * np.cumsum(ar_to_ma(pi, h) ** 2))
         out = {
             "series_id": sid,
             "step": np.arange(1, h + 1, dtype="int32"),
@@ -283,12 +288,10 @@ def forecast(
         for lev in levels:
             out[f"lo_{lev}"] = mean - z[lev] * se
             out[f"hi_{lev}"] = mean + z[lev] * se
-        return pd.DataFrame(out)
+        return out
 
-    return (
-        coef_df.groupBy(series_col)
-        .cogroup(train_df.groupBy(series_col))
-        .applyInPandas(fc_one, FORECAST_SCHEMA)
+    return _per_series(
+        train_df, coef_df, tol, fc_one, FORECAST_SCHEMA, series_col, ts_col, y_col
     )
 
 
@@ -300,39 +303,25 @@ def fitted_values(
     ts_col: str = "ts",
     y_col: str = "y",
 ) -> DataFrame:
-    """In-sample one-step fits + residuals (reference darima.py:320-327).
+    """In-sample one-step fits + residuals (reference darima.py:320-327)
+    for every observed row (a null or NaN y has no row, as in the fit).
 
     First ``tol`` points have no full lag window → null fitted/residual
     (the reference silently starts at index tol; explicit nulls here).
     """
     tol = cfg.tol
 
-    def score_one(pdf_coef: pd.DataFrame, pdf_train: pd.DataFrame) -> pd.DataFrame:
-        if pdf_coef.empty or pdf_train.empty:
-            return pd.DataFrame(columns=["series_id", "ts", "fitted", "residual"])
-        sid = str(pdf_train[series_col].iloc[0])
-        beta0, beta1, pi, _ = _coef_vector(pdf_coef, tol)
-        pdf_train = pdf_train.sort_values(ts_col)
-        y = pdf_train[y_col].to_numpy(dtype=float)
+    def score_one(sid, ts, y, beta0, beta1, pi, sigma2) -> dict:
         T = y.size
         fitted = np.full(T, np.nan)
         if T > tol:
             lag_mat = np.lib.stride_tricks.sliding_window_view(y[:-1], tol)[:, ::-1]
             t_idx = np.arange(tol + 1, T + 1, dtype=float)
             fitted[tol:] = beta0 + beta1 * t_idx + lag_mat @ pi
-        return pd.DataFrame(
-            {
-                "series_id": sid,
-                "ts": pdf_train[ts_col].to_numpy(),
-                "fitted": fitted,
-                "residual": y - fitted,
-            }
-        )
+        return {"series_id": sid, "ts": ts, "fitted": fitted, "residual": y - fitted}
 
-    return (
-        coef_df.groupBy(series_col)
-        .cogroup(train_df.groupBy(series_col))
-        .applyInPandas(score_one, FITTED_SCHEMA)
+    return _per_series(
+        train_df, coef_df, tol, score_one, FITTED_SCHEMA, series_col, ts_col, y_col
     )
 
 

@@ -36,12 +36,21 @@ def resample_regular(
 ) -> DataFrame:
     """Gap-fill each series onto a regular grid (operator q_ts_resample).
 
-    Builds the per-series [min, max] hourly grid with ``sequence`` + explode
-    (distributed, no driver loop), left-joins observations, then fills gaps:
-    ``zero`` → 0.0, ``null`` → leave null, ``ffill`` → last non-null value
-    via an ignore-nulls window. Timestamps are truncated to the grid step.
+    Sums the observations per series and truncated timestamp, builds each
+    series' [min, max] grid at ``step`` with ``sequence`` + explode
+    (distributed, no driver loop), looks each grid point up in the sums,
+    then fills gaps: ``zero`` → 0.0, ``null`` → leave null, ``ffill`` →
+    last non-null value via an ignore-nulls window, ``interp`` → linear.
+
+    ``step`` must be one unit (``"1 hour"``, ``"1 minute"``, ...):
+    ``date_trunc`` truncates to the unit, not to the step, so a multi-unit
+    step such as ``"15 minutes"`` would leave off-grid keys that the
+    gap-fill lookup never reads. Anything else raises ``ValueError``.
     """
-    unit = step.split()[-1].rstrip("s")  # "1 hour" -> "hour"
+    parts = step.split()
+    if len(parts) != 2 or parts[0] != "1":
+        raise ValueError(f"step must be one unit, e.g. '1 hour'; got {step!r}")
+    unit = parts[1].rstrip("s")  # "1 hour" -> "hour"
     # null grid timestamps can't happen (date_trunc of a null ts): drop
     # them up front — the previous join-based shape dropped such rows
     # implicitly (a null key matches no grid row), and map_from_entries

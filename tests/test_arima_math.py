@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from python_darima_spark.darima.arima_math import (
+    ar_recursion,
     ar_to_ma,
     inv_box_cox,
     normal_ppf,
@@ -57,7 +58,8 @@ def test_seasonal_diff_D1():
 
 def test_full_sarima_matches_reference_recursion():
     """Long-division formulation ≡ the reference's π recursion
-    (/root/reference/auto_arima.R:42-56) on a mixed model."""
+    (auto_arima.R:42-56) on a mixed seasonal model and on a one-MA-term
+    model (the single-lag path of :func:`ar_recursion`)."""
     ar, ma, sar, sma, d, D, m, tol = [0.4, -0.2], [0.3], [0.5], [-0.25], 1, 1, 4, 60
     out = sarima_to_ar(ar=ar, d=d, ma=ma, sar=sar, D=D, sma=sma, m=m, tol=tol)
 
@@ -77,6 +79,34 @@ def test_full_sarima_matches_reference_recursion():
     ref = reference_pi_recursion(a, theta, tol)
     np.testing.assert_allclose(out["pi"], ref, atol=1e-10)
 
+    # ARIMA(1,1,1): a(B) = (1 - 0.5B)(1 - B), b(B) = 1 + 0.6B
+    out = sarima_to_ar(ar=[0.5], d=1, ma=[0.6], tol=tol)
+    a = np.convolve([1.0, -0.5], [1.0, -1.0])
+    ref = reference_pi_recursion(a, [-0.6], tol)
+    np.testing.assert_allclose(out["pi"], ref, atol=1e-10)
+
+
+def _loop_recursion(x, c, init):
+    """y_j = x_j + sum_{k=1..K} c_k * y_{j-k} over init ++ y, written out."""
+    hist = list(init)
+    for xj in x:
+        K = min(len(c), len(hist))
+        hist.append(xj + sum(c[k - 1] * hist[-k] for k in range(1, K + 1)))
+    return hist[len(init) :]
+
+
+@pytest.mark.parametrize("with_init", [False, True])
+@pytest.mark.parametrize("p", [0, 1, 2, 30])
+def test_ar_recursion_matches_python_loop(p, with_init):
+    rng = np.random.default_rng(p)
+    c = rng.uniform(-0.9, 0.9, p) / max(p, 1)
+    x = rng.normal(size=50)
+    # 5 initial values: shorter than the 30-lag c, so K grows into it
+    init = rng.normal(size=5) if with_init else ()
+    got = ar_recursion(x, c, init=init)
+    assert got.shape == (50,)
+    np.testing.assert_allclose(got, _loop_recursion(x, c, init), rtol=1e-12, atol=1e-12)
+
 
 def test_ar_to_ma_ar1():
     psi = ar_to_ma([0.5], 5)
@@ -93,10 +123,6 @@ def test_ar_to_ma_ar2():
     )
 
 
-def test_ar_to_ma_compat_reproduces_reference_zeros():
-    np.testing.assert_allclose(ar_to_ma([0.5, 0.2], 6, compat=True), np.zeros(6))
-
-
 def test_normal_ppf():
     assert normal_ppf(0.975) == pytest.approx(1.959964, abs=1e-5)
     assert normal_ppf(0.5) == pytest.approx(0.0, abs=1e-12)
@@ -108,11 +134,3 @@ def test_inv_box_cox_roundtrip():
     for lam in [0.0, 0.5, 1.0, 2.0]:
         fwd = np.log(y) if lam == 0 else (y**lam - 1) / lam
         np.testing.assert_allclose(inv_box_cox(fwd, lam), y, atol=1e-10)
-
-
-def test_inv_box_cox_compat_is_forward_transform():
-    y = np.array([2.0, 3.0])
-    lam = 0.5
-    np.testing.assert_allclose(
-        inv_box_cox(y, lam, compat=True), (y**lam - 1) / lam
-    )

@@ -11,7 +11,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from python_darima_spark.darima.fit import fit_window_to_coef_rows
+from python_darima_spark.darima.fit import coef_names, fit_window_to_coef_vec
 from python_darima_spark.queries.domain import _CFG, q_ts_fit_combine
 
 SF = "/root/testdata/sf0.001"
@@ -42,17 +42,16 @@ def _oracle_coefs() -> pd.DataFrame:
         ).astype(int)
         per_window = []
         for wid in range(_CFG.num_windows):
-            rows = dict(
-                fit_window_to_coef_rows(
-                    y[ids == wid],
-                    m=_CFG.period,
-                    tol=_CFG.tol,
-                    method="mean",
-                    max_p=_CFG.max_p,
-                    max_q=_CFG.max_q,
-                    max_P=_CFG.max_P,
-                )
+            vals = fit_window_to_coef_vec(
+                y[ids == wid],
+                m=_CFG.period,
+                tol=_CFG.tol,
+                method="mean",
+                max_p=_CFG.max_p,
+                max_q=_CFG.max_q,
+                max_P=_CFG.max_P,
             )
+            rows = dict(zip(coef_names(_CFG.tol), vals))
             per_window.append(rows)
         keys = per_window[0].keys()
         for k in keys:

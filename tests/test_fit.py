@@ -8,7 +8,8 @@ import pytest
 
 from python_darima_spark.darima.fit import (
     auto_ar_fit,
-    fit_window_to_coef_rows,
+    coef_names,
+    fit_window_to_coef_vec,
     select_orders_of_differencing,
 )
 
@@ -99,7 +100,7 @@ def test_constant_series():
 
 def test_coef_rows_shape_and_keys():
     y = _simulate_ar(0.5, 400, seed=5)
-    rows = fit_window_to_coef_rows(y, tol=50)
+    rows = list(zip(coef_names(50), fit_window_to_coef_vec(y, tol=50)))
     keys = [k for k, _ in rows]
     assert keys[0] == "beta0" and keys[1] == "beta1"
     assert keys[2] == "ar1" and keys[51] == "ar50"
@@ -109,8 +110,8 @@ def test_coef_rows_shape_and_keys():
 
 def test_dlsa_scaling():
     y = _simulate_ar(0.5, 400, seed=6)
-    mean_rows = dict(fit_window_to_coef_rows(y, tol=20, method="mean"))
-    dlsa_rows = dict(fit_window_to_coef_rows(y, tol=20, method="dlsa"))
+    mean_rows = dict(zip(coef_names(20), fit_window_to_coef_vec(y, tol=20, method="mean")))
+    dlsa_rows = dict(zip(coef_names(20), fit_window_to_coef_vec(y, tol=20, method="dlsa")))
     w = dlsa_rows["sigma2"]  # = n/sigma2
     assert w == pytest.approx(400 / mean_rows["sigma2"], rel=1e-9)
     assert dlsa_rows["ar1"] == pytest.approx(mean_rows["ar1"] * w, rel=1e-9)

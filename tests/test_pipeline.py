@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_darima_spark.darima.arima_math import normal_ppf
-from python_darima_spark.darima.fit import fit_window_to_coef_rows, fit_window_to_coef_vec
+from python_darima_spark.darima.fit import coef_names, fit_window_to_coef_vec
 from python_darima_spark.darima.pipeline import (
     DarimaConfig,
     combine_coefs,
@@ -130,6 +130,17 @@ def test_resample_aggregates_within_bucket(spark):
     assert out["y"].tolist() == [3.0, 0.0, 5.0]
 
 
+def test_resample_rejects_multi_unit_step(spark):
+    """date_trunc truncates to the unit, not the step: a "15 minutes" grid
+    would silently lose every value off the quarter hours."""
+    pdf = pd.DataFrame(
+        {"series_id": "s1", "ts": [T0 + dt.timedelta(minutes=k) for k in (0, 10, 15, 40)],
+         "y": [1.0, 2.0, 4.0, 8.0]}
+    )
+    with pytest.raises(ValueError, match="one unit"):
+        resample_regular(spark.createDataFrame(pdf), step="15 minutes")
+
+
 def test_k1_combine_equals_single_fit(spark, cfg):
     """Property: one window → combined vector == direct local fit."""
     y = _ar1(300)
@@ -138,9 +149,8 @@ def test_k1_combine_equals_single_fit(spark, cfg):
     combined = (
         combine_coefs(fit_windows(sdf, one), one).toPandas().set_index("coef")["value"]
     )
-    local = dict(
-        fit_window_to_coef_rows(y, m=1, tol=30, method="mean", max_p=3, max_q=0, max_P=0)
-    )
+    vals = fit_window_to_coef_vec(y, m=1, tol=30, method="mean", max_p=3, max_q=0, max_P=0)
+    local = dict(zip(coef_names(30), vals))
     for k, v in local.items():
         assert combined[k] == pytest.approx(v, rel=1e-9), k
 
@@ -170,7 +180,7 @@ def test_presplit_frame_keeps_its_windows(spark, cfg):
     want = np.mean(
         [fit_window_to_coef_vec(w, **kw) for w in (y[1::2], y[0::2])], axis=0
     )
-    names = ["beta0", "beta1"] + [f"ar{i}" for i in range(1, 31)] + ["sigma2"]
+    names = coef_names(30)
     assert len(got) == len(names)
     for k, v in zip(names, want):
         assert got[k] == pytest.approx(v, rel=1e-9, abs=1e-12), k
@@ -334,3 +344,42 @@ def test_full_pipeline_two_series(spark):
     scores = res.scores.toPandas()
     assert 0 < scores["mase"].iloc[0] < 3
     assert 0 < scores["msis_95"].iloc[0] < 50
+
+
+def _with_y_at(sdf, i, value):
+    """``sdf`` with the y of its i-th hourly row replaced by ``value``."""
+    ts = T0 + dt.timedelta(hours=i)
+    return sdf.withColumn("y", F.when(F.col("ts") == F.lit(ts), value).otherwise(F.col("y")))
+
+
+def test_null_training_value_is_skipped_by_forecast(spark):
+    """A null y inside the last tol training rows is no observation: the
+    forecasts equal those of the same data without that row."""
+    cfg = DarimaConfig(num_windows=2, period=1, tol=10, max_p=3, max_q=0, max_P=0)
+    y = _ar1(300)
+    sdf = spark.createDataFrame(_series_pdf(y))
+    with_null = _with_y_at(sdf, 295, F.lit(None).cast("double"))
+    without = sdf.where(F.col("ts") != F.lit(T0 + dt.timedelta(hours=295)))
+    got = darima(with_null, cfg, h=5).forecasts.orderBy("step").toPandas()
+    want = darima(without, cfg, h=5).forecasts.orderBy("step").toPandas()
+    assert np.isfinite(got["mean"]).all()
+    for c in ["mean", "se", "lo_95", "hi_95"]:
+        np.testing.assert_allclose(got[c], want[c], rtol=1e-12)
+    assert (got["ts"] == want["ts"]).all()
+
+
+def test_nan_training_value_is_no_dlsa_observation(spark):
+    """A NaN y is dropped by the fit, so it must not count in n_obs either:
+    DLSA coefficients (σ² included) equal those without that row."""
+    cfg = DarimaConfig(
+        num_windows=2, period=1, tol=10, method="dlsa", max_p=3, max_q=0, max_P=0
+    )
+    y = _ar1(300)
+    sdf = spark.createDataFrame(_series_pdf(y))
+    with_nan = _with_y_at(sdf, 100, F.lit(float("nan")))
+    without = sdf.where(F.col("ts") != F.lit(T0 + dt.timedelta(hours=100)))
+    got = darima(with_nan, cfg).coefs.toPandas().set_index("coef")["value"]
+    want = darima(without, cfg).coefs.toPandas().set_index("coef")["value"]
+    assert sorted(got.index) == sorted(want.index)
+    for k in want.index:
+        assert got[k] == pytest.approx(want[k], rel=1e-12), k
