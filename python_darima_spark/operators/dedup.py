@@ -2,20 +2,25 @@
 
 All variants are pure DataFrame programs — shingling, hashing, banding and
 verification all stay JVM-side (whole-stage codegen); there is no Python in
-the hot path. Scale notes per operator:
+the hot path. Every near-dup operator reads one token table, ``(id, gid =
+xxhash64(token))`` with distinct rows per document (:func:`doc_shingle_gids`,
+:func:`doc_word_gids`; a NULL text has no tokens and never pairs), takes
+candidates from one bucket self-join (:func:`_bucket_pairs`) or one prefix
+filter (:func:`_prefix_pairs`), and verifies Jaccard or containment exactly
+on sorted gid arrays. Scale notes per operator:
 
-* exact      — one hash-shuffle on the 8-byte digest; keep-first is a
-               per-digest min, not a window sort over everything.
-* minhash    — O(docs × shingles) map work, then LSH banding turns the
-               O(n²) pair space into per-bucket joins; only candidate
-               pairs (tiny at realistic thresholds) are verified exactly.
-* simhash    — 64 partial aggregates per doc (one shuffle); near-dup pairs
-               via pigeonhole banding on 16-bit chunks, then exact Hamming
-               check with xor+bit_count.
-
-Every Jaccard-verified pair (MinHash, its probe shapes, verified SimHash)
-is checked exactly on sorted xxhash64 shingle-gid arrays from
-:func:`doc_shingle_gids`; a NULL text has no shingles and never pairs.
+* exact       — one hash-shuffle on the 8-byte digest; keep-first is a
+                per-digest min, not a window sort over everything.
+* minhash     — O(docs × shingles) map work, then LSH banding turns the
+                O(n²) pair space into per-bucket joins; only candidate
+                pairs (tiny at realistic thresholds) are verified exactly.
+* simhash     — 63 partial aggregates per doc (one shuffle); near-dup
+                pairs via pigeonhole banding on fingerprint chunks, then
+                an exact Hamming check with xor+bit_count.
+* ngram,
+  containment — the counting prefix filter: probe each doc's rarest
+                tokens against an inverted index, recall 1.0 by a
+                deterministic bound.
 
 ANSI-mode note: Spark 4 throws on bigint overflow, so the universal-hash
 family (a·h+b) mod p keeps h < 2³² and a,b < 2³⁰ — products stay < 2⁶²
@@ -23,6 +28,8 @@ and never overflow, whatever spark.sql.ansi.enabled is set to.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -75,25 +82,6 @@ def dedup_exact(
     return df.join(keeper_ids, on=id_col, how="left_semi")
 
 
-def char_shingles(text_col: str, k: int = 5):
-    """Array of k-char shingles, JVM-side: substring at every offset.
-
-    ALL-ASCII rows (length == octet_length, checked once per row) slice
-    the UTF-8 BYTES instead: ``substring`` on a string re-scans from the
-    head to find the char offset (O(offset) per shingle — O(len²) per
-    document), while the binary slice is O(1); the bytes are identical
-    for ASCII, so the produced shingle strings are too (r10; the
-    quadratic scan dominated the whole dedup family's shingle stages).
-    Non-ASCII rows keep the exact char-substring path."""
-    seq = f"sequence(1, greatest(length({text_col}) - {k - 1}, 1), 1)"
-    return F.expr(
-        f"if(length({text_col}) = octet_length({text_col}), "
-        f"transform({seq}, i -> cast(substring(cast({text_col} as binary),"
-        f" i, {k}) as string)), "
-        f"transform({seq}, i -> substring({text_col}, i, {k})))"
-    )
-
-
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """The one shingler: ``(id, gid)`` per k-char shingle OFFSET, not
     distinct; gid is the replay-stable ``xxhash64`` of the shingle. NULL
@@ -107,10 +95,13 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
     the near-dup family's wall at sf0.01 (probe 4.0 s → 8.7 s) before
     the round-8 re-audit caught it. ``fan_out`` runs BEFORE the
     ~300×-row explode: full-core shingling, and the consumer's
-    groupBy(id) reuses this partitioning (no second exchange). All-ASCII
-    rows hash a slice of the binary column, O(1) per shingle, as in
-    :func:`char_shingles` (xxhash64 hashes raw bytes, so BINARY and
-    STRING inputs with the same bytes hash identically)."""
+    groupBy(id) reuses this partitioning (no second exchange).
+
+    All-ASCII rows (length == octet_length) hash an O(1) slice of the
+    UTF-8 BYTES: ``substring`` on a string re-scans from the head,
+    O(len²) per document (r10; it dominated the whole family's shingle
+    stages). xxhash64 hashes raw bytes, so both slices hash identically;
+    non-ASCII rows keep the exact char-substring path."""
     offsets = F.sequence(
         F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))
     )
@@ -142,7 +133,7 @@ def doc_shingle_gids(
     DISTINCT shingle per document (NULL texts have none), gid =
     replay-stable ``xxhash64`` of the shingle text. Every dedup pipeline
     in the family starts from exactly this table — MinHash signatures
-    (``pmod(gid, P)`` is the base hash), the containment dictionary
+    (``pmod(gid, P)`` is the base hash), the containment prefix filter
     (document frequency per gid), and exact set verification (sorted
     int-gid arrays intersect ~10× cheaper than 5-char-string arrays) —
     so a caller that computes it once and persists it
@@ -150,12 +141,41 @@ def doc_shingle_gids(
     shingle explode a single time for the whole family instead of once
     per pipeline. A 64-bit collision merges one shingle pair
     deterministically (P ≈ n²/2⁶⁴ per doc, ~1e-13 at 2k shingles/doc —
-    the same accepted bound as the containment dictionary).
+    the same accepted bound for every gid table). The gid is a
+    content hash, not ``monotonically_increasing_id``: a run-dependent id
+    is only bijective if every partition is computed exactly once, and a
+    lineage replay of a lost cached partition would re-draw ids and
+    silently mix two vocabularies in the verify arrays.
 
     Per-doc distinctness comes from the (id, gid) hash aggregate —
     partial aggregation dedups map-side, no per-row array ever
     materializes."""
     return _shingle_rows(df, text_col, id_col, shingle_k).distinct()
+
+
+def doc_word_gids(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+) -> DataFrame:
+    """The word-gram sibling of :func:`doc_shingle_gids`: one ``(id, gid)``
+    row per DISTINCT word n-gram per document, gid = ``xxhash64`` of the n
+    consecutive lowercased whitespace-split words joined by one space (a
+    text of fewer than n words is one gram). NULL texts are dropped:
+    ``greatest(size(NULL) − (n−1), 1)`` would give each one an empty gram,
+    so null docs would pair. Same shape as :func:`_shingle_rows`: fan out,
+    then explode the gram offsets (no higher-order functions)."""
+    words = fan_out(df.where(F.col(text_col).isNotNull()), id_col).select(
+        F.col(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("_w")
+    )
+    offsets = F.sequence(F.lit(1), F.greatest(F.size("_w") - (n - 1), F.lit(1)))
+    gram = F.concat_ws(" ", F.slice("_w", F.col("_i"), F.lit(n)))
+    return (
+        words.select(id_col, "_w", F.explode(offsets).alias("_i"))
+        .select(id_col, F.xxhash64(gram).alias("gid"))
+        .distinct()
+    )
 
 
 def minhash_signatures(
@@ -273,17 +293,29 @@ def minhash_candidate_pairs(
             .where(F.col("_bsz") <= max_bucket_size)
             .drop("_bsz")
         )
-    l = exploded.alias("l")
-    r = exploded.alias("r")
+    return _bucket_pairs(exploded, id_col, ["band_id", "band_hash"])
+
+
+def _bucket_pairs(rows: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
+    """The one bucket self-join: the distinct ``(id_a, id_b)`` pairs,
+    ``id_a < id_b``, of rows that agree on every column in ``keys``. Any
+    other column of ``rows`` comes along as ``<col>_a`` and ``<col>_b``.
+    The shuffle key is ``keys`` — rows·buckets skinny rows, never n² —
+    and a pair that shares several buckets comes out once. MinHash
+    bands, SimHash chunks and the embedding LSH tables all pair here."""
+    a, b = rows.alias("a"), rows.alias("b")
+    match = reduce(
+        lambda x, y: x & y,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    rest = [c for c in rows.columns if c != id_col and c not in keys]
     return (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        a.join(b, match)
         .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in rest],
         )
         .distinct()
     )
@@ -341,6 +373,37 @@ def _gid_arrays(gids: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _pair_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """The ids on either side of the ``(id_a, id_b)`` pairs, as one
+    ``id_col`` column for :func:`_gid_arrays`. Broadcast: the planner
+    cannot see the size of these answer-sized ids through a checkpoint,
+    so it shuffled the whole text or gid table and added a runtime
+    bloom-filter scan. No distinct: a semi-join needs none, and it costs
+    a shuffle stage."""
+    return F.broadcast(
+        pairs.select(F.col("id_a").alias(id_col)).union(
+            pairs.select(F.col("id_b").alias(id_col))
+        )
+    )
+
+
+def _with_sides(
+    pairs: DataFrame, side_a: DataFrame, side_b: DataFrame, id_col: str, col: str
+) -> DataFrame:
+    """``pairs`` (two id columns) with ``col`` of each side's per-id table
+    joined on as ``<col>_a`` and ``<col>_b``: the sorted gid arrays
+    ``_sh`` of :func:`_gid_arrays`, or the embedding vectors. An id
+    missing from its table (a NULL text has no tokens) drops the pair."""
+    a, b = pairs.columns
+    return pairs.join(
+        side_a.select(F.col(id_col).alias(a), F.col(col).alias(f"{col}_a")),
+        on=a,
+    ).join(
+        side_b.select(F.col(id_col).alias(b), F.col(col).alias(f"{col}_b")),
+        on=b,
+    )
+
+
 def _jaccard_verify(
     pairs: DataFrame,
     arr_a: DataFrame,
@@ -348,21 +411,14 @@ def _jaccard_verify(
     id_col: str,
     threshold: float,
 ) -> DataFrame:
-    """The one exact-verify tail: join each side of the id pairs
-    (``pairs``' two columns) to its :func:`_gid_arrays` table and keep
-    shingle Jaccard ≥ ``threshold``, rounded to 6 places. Int arrays
-    intersect ~10× cheaper than 5-char-string arrays (the
+    """The one exact-verify tail: keep the id pairs (``pairs``' two
+    columns) whose token-set Jaccard on the sorted gid arrays
+    (:func:`_with_sides`) is ≥ ``threshold``, rounded to 6 places. Int
+    arrays intersect ~10× cheaper than 5-char-string arrays (the
     containment_pairs measurement); gid Jaccard equals string Jaccard up
-    to 64-bit collisions (~1e-13/doc). A doc without shingles (NULL
-    text) joins nothing, so it never pairs."""
+    to 64-bit collisions (~1e-13/doc)."""
     a, b = pairs.columns
-    joined = pairs.join(
-        arr_a.select(F.col(id_col).alias(a), F.col("_sh").alias("_sh_a")),
-        on=a,
-    ).join(
-        arr_b.select(F.col(id_col).alias(b), F.col("_sh").alias("_sh_b")),
-        on=b,
-    )
+    joined = _with_sides(pairs, arr_a, arr_b, id_col, "_sh")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
     union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
     return (
@@ -523,10 +579,7 @@ def _probe_verified_pairs(
     pre = _estimate_prefilter(cands, sig_new, sig_idx, id_col, threshold, num_hashes)
     arrs = []
     for docs, side in ((new_df, "id_new"), (old_df, "id_old")):
-        # broadcast: the planner cannot see the size of these answer-sized
-        # ids through the checkpoint, so it shuffled the whole text or gid
-        # table and added a runtime bloom-filter scan. No distinct: a
-        # semi-join needs none, and it costs a shuffle stage.
+        # broadcast and not distinct, as in _pair_ids
         ids = F.broadcast(pre.select(F.col(side).alias(id_col)))
         gids = shingle_gids
         if gids is None:
@@ -722,6 +775,83 @@ def minhash_probe_index(
     return result
 
 
+# ε of the counting prefix filter (see _prefix_pairs)
+_PROBE_FRAC = 0.05
+
+
+def _prefix_pairs(gids: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The one prefix filter over a token table ``(id, gid)``: candidate
+    ``(id_a, id_b)`` pairs, ``id_a < id_b``, each unordered pair once.
+
+    A COUNTING prefix filter (the PPJoin prefix bound, Xiao et al.,
+    WWW 2008, generalized from "≥1 shared probe token" to "≥k shared"):
+    order each doc's tokens by global document frequency ascending and
+    probe the ``n − ⌈t·n⌉ + k`` RAREST, with ``k = max(3, ⌈ε·n⌉)``
+    (ε = ``_PROBE_FRAC``). Recall is PROVABLY 1.0 for every pair whose
+    smaller set S shares ≥ ⌈t·n_S⌉ tokens with its partner — containment
+    max(|A∩B|/|A|, |A∩B|/|B|) ≥ t, and Jaccard ≥ t too, since J ≥ t
+    implies |A∩B| ≥ t·|A∪B| ≥ t·n_S: at most ``n_S − ⌈t·n_S⌉`` of S's
+    probes can miss, so at least ``min(k, ⌈t·n_S⌉)`` MUST hit the
+    partner's inverted index, and that many hits are required. A random
+    pair fakes ONE shared rare token easily but ⌈ε·n⌉ of them
+    binomially never (containment at sf0.1: 6.6 M candidates with k=1 →
+    84 k with k=εn, against 256 true pairs), for a 1.5× probe price at
+    t=0.9 ((1−t+ε)·n rows per doc instead of (1−t)·n).
+
+    Only the SMALLER side of a pair needs to probe (the guarantee is the
+    smaller doc's), so the index join keeps a probe row only when the
+    indexed doc is larger (ids break size ties) — half the join volume,
+    and each unordered pair emerges from one probe direction, so no
+    distinct is needed. Every stage is linear in corpus token volume
+    (containment: 10.0× candidates / ~4× wall at 10× data on local[32]).
+    Survivors are byte-tiny, so they are repartitioned BY NUMBER (the
+    :func:`_estimate_prefilter` finding: AQE's byte-based coalescing
+    would run the per-pair array intersects on a few partitions) and
+    checkpointed eagerly: the verify reads them up to three times."""
+    # document frequency as a window count over gid: one shuffle, not
+    # groupBy + join-back; then one keyed window pass computes both the
+    # df-ascending probe rank and the doc's token-set size
+    wdoc = Window.partitionBy(id_col)
+    ranked = (
+        gids.withColumn("_df", F.count("*").over(Window.partitionBy("gid")))
+        .withColumn("_rn", F.row_number().over(wdoc.orderBy("_df", "gid")))
+        .withColumn("_n", F.count("*").over(wdoc))
+    )
+    # exact prefix bound n − ⌈t·n⌉ + k, epsilon-guarded: the float
+    # floor((1−t)·n)+1 form dropped a probe at the exact-threshold
+    # boundary ((1.0−0.9)·20 = 1.999…96 floors to 1) and with it a true
+    # pair (hypothesis-found, round 5)
+    kcol = F.greatest(F.lit(3), F.ceil(F.lit(_PROBE_FRAC) * F.col("_n")))
+    tn = F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9))
+    probe = ranked.where(
+        F.col("_rn") <= F.col("_n") - tn + kcol
+    ).select(
+        F.col(id_col).alias("_pid"),
+        "gid",
+        F.col("_n").alias("_np"),
+        F.least(kcol, tn).alias("_need"),
+    )
+    index = ranked.select(
+        F.col(id_col).alias("_iid"), "gid", F.col("_n").alias("_ni")
+    )
+    bigger = (F.col("_ni") > F.col("_np")) | (
+        (F.col("_ni") == F.col("_np")) & (F.col("_iid") > F.col("_pid"))
+    )
+    return (
+        probe.join(index, "gid")
+        .where(bigger)
+        .groupBy("_pid", "_iid", "_need")
+        .agg(F.count("*").alias("_hits"))
+        .where(F.col("_hits") >= F.col("_need"))
+        .select(
+            F.least("_pid", "_iid").alias("id_a"),
+            F.greatest("_pid", "_iid").alias("id_b"),
+        )
+        .repartition(shuffle_width(gids.sparkSession))
+        .localCheckpoint(eager=True)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -729,112 +859,23 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Word n-gram Jaccard similarity with PREFIX-FILTER candidate
-    generation (the containment_pairs construction applied to the
-    symmetric threshold).
-
-    History: through round 4 this used length-bucket blocking
-    (``|blk_a − blk_b| ≤ 1`` rewritten as a 3-probe equi-join). The
-    round-5 sf1 scale probe exposed it as degenerate on this corpus:
-    with ~8–90-word docs and 64-word buckets, essentially EVERY doc
-    lands in buckets 0/1, the "blocked" join is a full cross join, and
-    at 10× data the candidate count grows 100× (the q_dedup_cluster_star
-    probe ran >20 min at sf1 before being killed). Blocking keys must
-    discriminate; a bucket wider than the corpus's length distribution
-    does not.
-
-    Candidates now come from the inverted-index prefix filter: order
-    each doc's grams by global document frequency ascending and probe
-    only the ``floor((1−t)·|A|)+1`` RAREST against the full index.
-    Recall is provably 1.0: J(A,B) ≥ t implies |A∩B| ≥ t·|A∪B| ≥ t·|A|,
-    so at most ``(1−t)·|A|`` of A's grams miss B and at least one probe
-    gram must hit. Word 3-grams are overwhelmingly df=1, so posting
-    lists are short and candidate volume tracks true-pair volume, not
-    corpus-pair volume. The size-ratio prefilter
-    ``min(|A|,|B|) ≥ t·max(|A|,|B|)`` (implied by J ≥ t) still prunes
-    before any array traversal, and the union size derives as
-    ``|A|+|B|−|A∩B|`` so ONE O(|A|+|B|) intersect runs per survivor.
-    At 100 TB: two shuffles of the skinny (id, gram) table + keyed
-    equi-joins — same posture as containment_pairs; per-gram posting
-    lists can additionally be length-capped if a boilerplate gram goes
-    hot (same tradeoff as the LSH ``max_bucket_size``)."""
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(split(lower({text_col}), '\\\\s+')) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(split(lower({text_col}), '\\\\s+'), i, {n})))"
+    """Word n-gram Jaccard pairs ``(id_a, id_b, jaccard)``, ``id_a <
+    id_b``, jaccard ≥ ``threshold``, over every pair of the corpus; the
+    sets are the docs' distinct word n-grams (:func:`doc_word_gids`).
+    Candidates come from the counting prefix filter
+    (:func:`_prefix_pairs`, recall 1.0); word 3-grams are overwhelmingly
+    df=1, so candidate volume tracks true-pair volume, not corpus-pair
+    volume. Candidates are verified on sorted gid arrays of candidate
+    docs only (:func:`_jaccard_verify`)."""
+    # persisted: the prefix filter and the verify arrays both read the
+    # gram table; released once the (small) result is materialized
+    gids = doc_word_gids(df, text_col, id_col, n).persist()
+    pairs = _prefix_pairs(gids, id_col, threshold)
+    arr = _gid_arrays(gids, _pair_ids(pairs, id_col), id_col)
+    result = _jaccard_verify(pairs, arr, arr, id_col, threshold).localCheckpoint(
+        eager=True
     )
-    base = (
-        fan_out(df, id_col)
-        .select(F.col(id_col), F.array_distinct(grams).alias("_grams"))
-        .withColumn("_ng", F.size("_grams"))
-        .persist()
-    )
-    e = base.select(id_col, F.explode("_grams").alias("g")).persist()
-    # df as a window count over g: one shuffle, not groupBy+join-back
-    ranked = e.withColumn(
-        "_df", F.count("*").over(Window.partitionBy("g"))
-    ).withColumn(
-        "_rn",
-        F.row_number().over(Window.partitionBy(id_col).orderBy("_df", "g")),
-    )
-    szs = base.select(F.col(id_col), F.col("_ng"))
-    probe = (
-        ranked.join(szs, id_col)
-        # exact prefix bound n − ⌈t·n⌉ + 1 with an epsilon guard: the
-        # float form floor((1−t)·n)+1 loses a probe at exact-threshold
-        # boundaries ((1.0−0.9)·20 = 1.999…96 floors to 1), which is a
-        # RECALL hole — a pair at similarity exactly t can miss
-        # (hypothesis-found, round 5)
-        .where(
-            F.col("_rn")
-            <= F.col("_ng")
-            - F.ceil(F.lit(threshold) * F.col("_ng") - F.lit(1e-9))
-            + 1
-        )
-        .select(F.col(id_col).alias("_pid"), "g")
-    )
-    index = e.select(F.col(id_col).alias("_iid"), "g")
-    cands = (
-        probe.join(index, "g")
-        .where(F.col("_pid") != F.col("_iid"))
-        .select(
-            F.least("_pid", "_iid").alias("id_a"),
-            F.greatest("_pid", "_iid").alias("id_b"),
-        )
-        .distinct()
-    )
-    joined = cands.join(
-        base.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_grams").alias("_ga"),
-            F.col("_ng").alias("_na"),
-        ),
-        on="id_a",
-    ).join(
-        base.select(
-            F.col(id_col).alias("id_b"),
-            F.col("_grams").alias("_gb"),
-            F.col("_ng").alias("_nb"),
-        ),
-        on="id_b",
-    )
-    size_ok = F.least("_na", "_nb").cast("double") >= (
-        F.greatest("_na", "_nb") * threshold
-    )
-    inter = F.size(F.array_intersect("_ga", "_gb")).cast("double")
-    union = F.col("_na") + F.col("_nb") - inter
-    result = (
-        joined.where(size_ok)
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    base.unpersist()
-    e.unpersist()
+    gids.unpersist()
     return result
 
 
@@ -844,32 +885,35 @@ def simhash(
     id_col: str = "doc_id",
     tokenizer: str = "words",
 ) -> DataFrame:
-    """64-bit SimHash, fully relational: explode tokens,
-    64 conditional-sum partial aggregates (one shuffle on id), then
-    recompose the fingerprint bits.
+    """64-bit SimHash per doc → ``(id_col, simhash)``; each token's hash
+    is its gid in a token table, and a NULL text has no fingerprint.
 
-    ``tokenizer``: ``"words"`` (lowercased whitespace tokens — coarse,
-    good when vocabularies differ) or ``"shingle5"`` (char 5-shingles —
-    the same token space MinHash uses, so fingerprint distance tracks
+    ``tokenizer``: ``"words"`` (lowercased whitespace tokens, the n=1
+    :func:`doc_word_gids` table — coarse, good when vocabularies differ)
+    or ``"shingle5"`` (char 5-shingles, :func:`doc_shingle_gids` — the
+    same token space MinHash uses, so fingerprint distance tracks
     shingle-Jaccard; on corpora with a shared vocabulary word tokens
     saturate and near-dup/non-dup Hamming bands overlap)."""
     if tokenizer.startswith("shingle") and tokenizer[7:].isdigit():
-        token_arr = F.array_distinct(char_shingles(text_col, int(tokenizer[7:])))
+        gids = doc_shingle_gids(df, text_col, id_col, int(tokenizer[7:]))
     elif tokenizer == "words":
-        token_arr = F.array_distinct(F.split(F.lower(F.col(text_col)), r"\s+"))
+        gids = doc_word_gids(df, text_col, id_col, 1)
     else:
         raise ValueError(
             f"tokenizer must be 'words' or 'shingle<k>' (e.g. 'shingle5'), "
             f"got {tokenizer!r}"
         )
-    tokens = F.explode(token_arr).alias("tok")
-    hashed = fan_out(df, id_col).select(F.col(id_col), tokens).select(
-        id_col, F.xxhash64("tok").alias("h")
-    )
-    sums = hashed.groupBy(id_col).agg(
+    return _fingerprints(gids, id_col)
+
+
+def _fingerprints(gids: DataFrame, id_col: str) -> DataFrame:
+    """SimHash of a token table, fully relational: 63 conditional-sum
+    partial aggregates over the gids (one shuffle on id), then recompose
+    the fingerprint bits."""
+    sums = gids.groupBy(id_col).agg(
         *[
             F.sum(
-                F.when(F.col("h").bitwiseAND(F.lit(1 << j)) != 0, 1).otherwise(-1)
+                F.when(F.col("gid").bitwiseAND(F.lit(1 << j)) != 0, 1).otherwise(-1)
             ).alias(f"_b{j}")
             for j in range(63)  # bit 63 is the sign bit; keep fingerprints positive
         ]
@@ -881,22 +925,14 @@ def simhash(
     return sums.select(F.col(id_col), fp.alias("simhash"))
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    tokenizer: str = "words",
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ k. Candidate generation
-    by pigeonhole: split the 64-bit fingerprint into max_hamming+1 chunks —
-    any pair within distance k must agree exactly on ≥1 chunk, so bucketing
-    by (chunk_id, chunk_value) finds all of them without an n² join."""
+def _hamming_pairs(fps: DataFrame, id_col: str, max_hamming: int) -> DataFrame:
+    """``(id_a, id_b, hamming)`` for fingerprint pairs within
+    ``max_hamming`` bits. Candidate generation by pigeonhole: split the
+    64-bit fingerprint into max_hamming+1 chunks — any pair within
+    max_hamming bits must agree exactly on ≥1 chunk, so bucketing by
+    (chunk_id, chunk_val) finds all of them without an n² join."""
     n_chunks = max_hamming + 1
     bits = 64 // n_chunks
-    # persisted: the chunk self-join below reads fingerprints twice, and
-    # recomputing means re-running the token explode + 63-way aggregate
-    fps = simhash(df, text_col, id_col, tokenizer).persist()
     chunks = F.array(
         *[
             F.struct(
@@ -911,28 +947,29 @@ def simhash_near_duplicates(
     exploded = fps.select(id_col, "simhash", F.explode(chunks).alias("c")).select(
         id_col, "simhash", "c.chunk_id", "c.chunk_val"
     )
-    l, r = exploded.alias("l"), exploded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("_fa"),
-            F.col("r.simhash").alias("_fb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb")))
+    cands = _bucket_pairs(exploded, id_col, ["chunk_id", "chunk_val"])
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cands.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
+
+
+def simhash_near_duplicates(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    tokenizer: str = "words",
+) -> DataFrame:
+    """Near-dup pairs ``(id_a, id_b, hamming)`` by SimHash Hamming
+    distance ≤ ``max_hamming``, with pigeonhole chunk candidates
+    (:func:`_hamming_pairs`)."""
+    # persisted: the chunk self-join reads fingerprints twice, and
+    # recomputing means re-running the token explode + 63-way aggregate
+    fps = simhash(df, text_col, id_col, tokenizer).persist()
+    return _hamming_pairs(fps, id_col, max_hamming)
 
 
 def simhash_verified_pairs(
@@ -951,28 +988,31 @@ def simhash_verified_pairs(
     SimHash banding missed no true pair).
 
     Fingerprints hash the SAME char-k-shingle tokens the verification
-    measures, so Hamming distance tracks shingle-Jaccard; ``max_hamming=7``
-    (8 pigeonhole chunks of 8 bits) holds a wide margin on realistic
-    corpora — measured on the sf0.01 fixture: all 25 true pairs
-    (jaccard ≥ 0.93) at Hamming ≤ 6, while only those same 25 of the
-    124,750 possible pairs sit at Hamming ≤ 10 at all."""
-    cands = simhash_near_duplicates(
-        df, text_col, id_col, max_hamming, tokenizer=f"shingle{shingle_k}"
-    ).select("id_a", "id_b")
+    measures — one :func:`doc_shingle_gids` table feeds both, so each
+    text is shingled once — and Hamming distance tracks shingle-Jaccard;
+    ``max_hamming=7`` (8 pigeonhole chunks of 8 bits) holds a wide margin
+    on realistic corpora — measured on the sf0.01 fixture: all 25 true
+    pairs (jaccard ≥ 0.93) at Hamming ≤ 6, while only those same 25 of
+    the 124,750 possible pairs sit at Hamming ≤ 10 at all."""
+    # persisted: fingerprints and verify arrays both read it; released
+    # once the (small) result is materialized
+    gids = doc_shingle_gids(df, text_col, id_col, shingle_k).persist()
+    # persisted as in simhash_near_duplicates (sf0.1, 4 cores: 6.8 → 4.4 s)
+    fps = _fingerprints(gids, id_col).persist()
     # checkpointed: the verify reads the pairs three times, each read
     # re-running the fingerprints + chunk self-join (2.5× the sf0.1 wall)
-    cands = cands.localCheckpoint(eager=True)
-    # broadcast and not distinct, as in _probe_verified_pairs
-    ids = F.broadcast(
-        cands.select(F.col("id_a").alias(id_col)).union(
-            cands.select(F.col("id_b").alias(id_col))
-        )
+    cands = (
+        _hamming_pairs(fps, id_col, max_hamming)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True)
     )
-    gids = doc_shingle_gids(
-        df.join(ids, id_col, "left_semi"), text_col, id_col, shingle_k
+    fps.unpersist()
+    arr = _gid_arrays(gids, _pair_ids(cands, id_col), id_col)
+    result = _jaccard_verify(cands, arr, arr, id_col, threshold).localCheckpoint(
+        eager=True
     )
-    arr = _gid_arrays(gids, ids, id_col)
-    return _jaccard_verify(cands, arr, arr, id_col, threshold)
+    gids.unpersist()
+    return result
 
 
 def containment_pairs(
@@ -981,150 +1021,47 @@ def containment_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.9,
     shingle_k: int = 5,
-    probe_frac: float = 0.05,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment |A∩B|/|A| ≥ threshold — doc-inside-doc
     detection, the case Jaccard-based dedup structurally misses (a page
     quoted verbatim inside a 100× larger page has Jaccard ≈ 0.01 but
-    containment 1.0).
-
-    Candidate generation is a COUNTING prefix filter (the PPJoin prefix
-    bound generalized from "≥1 shared probe shingle" to "≥k shared"):
-    order each doc's shingles by global document frequency ascending and
-    probe the ``n − ⌈t·n⌉ + k`` RAREST, with ``k = max(3, ⌈ε·n⌉)``
-    (ε = ``probe_frac``). A true pair's smaller doc S shares
-    ≥ ⌈t·n_S⌉ shingles with its partner, so at most ``n_S − ⌈t·n_S⌉``
-    of S's probes can miss — at least ``min(k, ⌈t·n_S⌉)`` probe
-    shingles MUST hit the partner's inverted index. Requiring that many
-    hits keeps candidate recall PROVABLY 1.0 (a deterministic counting
-    bound, no hash-family luck) while slashing false candidates: on a
-    dense-vocabulary corpus a random pair fakes ONE shared rare shingle
-    easily, but faking ⌈ε·n⌉ of them is binomially impossible
-    (round-6 measurement at sf0.1: 6.6 M candidates with k=1 → 84 k
-    with k=εn, against 256 true pairs — which also made the round-5
-    MinHash-estimate prefilter and its ratio-bucketed drop table
-    obsolete; this replaces both). Probing costs (1−t+ε)·n instead of
-    (1−t)·n rows per doc — a 1.5× candidate-join price at t=0.9 for a
-    ~80× candidate cut.
-
-    Only the SMALLER side of a pair needs to probe (the containment
-    predicate is inter ≥ t·min(n_a, n_b), and the counting guarantee
-    above is exactly the smaller doc's), so the index join keeps a
-    probe row only when the indexed doc is larger (ids break size
-    ties) — halving the join volume and making each unordered pair
-    emerge from exactly one probe direction, so no distinct is needed.
-    Survivors are exact-verified in both directions from
-    dictionary-encoded shingle-id arrays (int arrays intersect ~10×
-    cheaper than 5-char-string arrays, and the gid dictionary is the
-    df table the ranking already computes). At 100 TB: the dictionary
-    is a groupBy with map-side combine (broadcast when small, shuffle
-    join when not — AQE decides), the probe×index join shuffles on the
-    int gid, the hit-count aggregate combines map-side, and the verify
-    join touches ~answer-sized pair sets; every stage is linear in
-    corpus shingle volume (measured 10.0× candidates / ~4× wall at 10×
-    data on local[32])."""
-    # the shared corpus stage (or its inline equivalent): one (id, gid)
-    # row per distinct shingle per doc; the dictionary id is a
-    # DETERMINISTIC content hash, not monotonically_increasing_id — a
-    # run-dependent gid is only bijective if every partition is computed
-    # exactly once, and a lineage replay of a lost cached partition
-    # would re-draw ids and silently mix two vocabularies in the verify
-    # arrays (round-6 ADVICE, medium). xxhash64 is replay-stable; a
-    # 64-bit collision merges one shingle pair deterministically
-    # (P≈n²/2⁶⁴, negligible).
-    src = (
+    containment 1.0). Returns ``(id_a, id_b, containment_a,
+    containment_b)``, ``id_a < id_b``, ``containment_x`` = |A∩B| / |x|,
+    for the pairs where either ratio is ≥ threshold. Candidates come
+    from the counting prefix filter (:func:`_prefix_pairs`, recall 1.0)
+    and are verified on sorted gid arrays of candidate docs only.
+    ``shingle_gids`` — a :func:`doc_shingle_gids` table, typically the
+    family-shared persisted stage — skips the text scan and explode."""
+    # the inline table is persisted because the prefix filter and the
+    # verify arrays both read it; a caller-supplied one is the caller's
+    gids = (
         shingle_gids
         if shingle_gids is not None
-        else doc_shingle_gids(df, text_col, id_col, shingle_k)
+        else doc_shingle_gids(df, text_col, id_col, shingle_k).persist()
     )
-    # per-gram document frequency, grouped and joined on the 8-byte gid
-    # (the string shingle never leaves the shared stage). persist: the
-    # df-annotated shingle table feeds FOUR consumers (ranked probe,
-    # index, and the two verify array sides) — unpersisted, each one
-    # replays the scan→shingle→dictionary subtree (same reasoning as
-    # minhash's persisted signatures; on a cluster, checkpoint to
-    # storage instead).
-    d = src.groupBy("gid").agg(F.count("*").alias("_df"))
-    e = src.join(d, "gid").select(id_col, "gid", "_df").persist()
-    # one keyed window pass computes both the df-ascending probe rank
-    # and the doc's shingle-set size (no separate sizes join)
-    wdoc = Window.partitionBy(id_col)
-    ranked = e.withColumn(
-        "_rn", F.row_number().over(wdoc.orderBy("_df", "gid"))
-    ).withColumn("_n", F.count("*").over(wdoc))
-    # exact prefix bound n − ⌈t·n⌉ + k, epsilon-guarded: the float
-    # floor((1−t)·n)+1 form dropped a probe at the exact-threshold
-    # boundary and with it a true pair (hypothesis-found, round 5)
-    kcol = F.greatest(F.lit(3), F.ceil(F.lit(probe_frac) * F.col("_n")))
-    tn = F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9))
-    probe = ranked.where(
-        F.col("_rn") <= F.col("_n") - tn + kcol
-    ).select(
-        F.col(id_col).alias("_pid"),
-        "gid",
-        F.col("_n").alias("_np"),
-        F.least(kcol, tn).alias("_need"),
-    )
-    index = ranked.select(
-        F.col(id_col).alias("_iid"), "gid", F.col("_n").alias("_ni")
-    )
-    bigger = (F.col("_ni") > F.col("_np")) | (
-        (F.col("_ni") == F.col("_np")) & (F.col("_iid") > F.col("_pid"))
-    )
-    cands = (
-        probe.join(index, "gid")
-        .where(bigger)
-        .groupBy("_pid", "_iid", "_need")
-        .agg(F.count("*").alias("_hits"))
-        .where(F.col("_hits") >= F.col("_need"))
-        .select("_pid", "_iid")
-        # repartition-by-number before the verify tail (the
-        # _estimate_prefilter round-6 finding): survivors are
-        # byte-tiny, and AQE's byte-based coalescing would otherwise
-        # run the per-pair array intersects on a few partitions
-        .repartition(shuffle_width(df.sparkSession))
-    )
-    # exact verify from the persisted gid arrays — survivors never
-    # re-shingle the raw text
-    arr = e.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("gid")).alias("_a")
-    )
-    joined = cands.join(
-        arr.select(F.col(id_col).alias("_pid"), F.col("_a").alias("_sp")),
-        on="_pid",
-    ).join(
-        arr.select(F.col(id_col).alias("_iid"), F.col("_a").alias("_si")),
-        on="_iid",
-    )
-    inter = F.size(F.array_intersect("_sp", "_si")).cast("double")
-    cont_p = inter / F.size("_sp")
-    cont_i = inter / F.size("_si")
-    # materialize the (small) survivor-pair set eagerly so the cached
-    # shingle table can be released here — a lazy return would pin it
-    # for the session lifetime (every invocation leaking a cache
-    # entry), and the caller has no handle to unpersist it
+    pairs = _prefix_pairs(gids, id_col, threshold)
+    arr = _gid_arrays(gids, _pair_ids(pairs, id_col), id_col)
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
+    cont_a = inter / F.size("_sh_a")
+    cont_b = inter / F.size("_sh_b")
+    # materialize the (small) result eagerly so the inline shingle table
+    # can be released here — a lazy return would pin it for the session
+    # lifetime (every invocation leaking a cache entry), and the caller
+    # has no handle to unpersist it
     result = (
-        joined.where(F.greatest(cont_p, cont_i) >= threshold)
+        _with_sides(pairs, arr, arr, id_col, "_sh")
+        .where(F.greatest(cont_a, cont_b) >= threshold)
         .select(
-            F.least("_pid", "_iid").alias("id_a"),
-            F.greatest("_pid", "_iid").alias("id_b"),
-            F.round(
-                F.when(F.col("_pid") < F.col("_iid"), cont_p).otherwise(
-                    cont_i
-                ),
-                6,
-            ).alias("containment_a"),
-            F.round(
-                F.when(F.col("_pid") < F.col("_iid"), cont_i).otherwise(
-                    cont_p
-                ),
-                6,
-            ).alias("containment_b"),
+            "id_a",
+            "id_b",
+            F.round(cont_a, 6).alias("containment_a"),
+            F.round(cont_b, 6).alias("containment_b"),
         )
         .localCheckpoint(eager=True)
     )
-    e.unpersist()
+    if shingle_gids is None:
+        gids.unpersist()
     return result
 
 

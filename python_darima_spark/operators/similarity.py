@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_darima_spark.operators import fan_out
+from python_darima_spark.operators.dedup import _bucket_pairs, _with_sides
 
 
 # The query side of ivf_topk / pq_topk is collected to the driver (probe
@@ -51,18 +52,17 @@ def as_double_vec(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot_product(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def cosine(a, b):
+    """Cosine similarity of two double-array columns, JVM-side (zip_with
+    and seeded folds). A zero vector has no cosine: ``try_divide`` makes
+    it NULL (plain division raises DIVIDE_BY_ZERO under ANSI), so it
+    never pairs, never ranks as a neighbour, and gets no centroid."""
 
+    def dot(u, v):
+        products = F.zip_with(u, v, lambda x, y: x * y)
+        return F.aggregate(products, F.lit(0.0), lambda acc, x: acc + x)
 
-def l2_norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
+    return F.try_divide(dot(a, b), F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def cosine_topk(
@@ -101,9 +101,7 @@ def cosine_topk(
     pairs = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos = dot_product(F.col("_cv"), F.col("_qv")) / (
-        l2_norm(F.col("_cv")) * l2_norm(F.col("_qv"))
-    )
+    cos = cosine(F.col("_cv"), F.col("_qv"))
     if round_to is not None:
         cos = F.round(cos, round_to)
     w = Window.partitionBy("query_id").orderBy(
@@ -111,6 +109,7 @@ def cosine_topk(
     )
     return (
         pairs.withColumn("cosine", cos)
+        .where(F.col("cosine").isNotNull())
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .select("query_id", "neighbor_id", "cosine")
@@ -175,9 +174,7 @@ def assign_centroids(
         ]
     )
     vec = as_double_vec(F.col(vec_col))
-    sims = F.transform(
-        cent_lit, lambda cv: dot_product(cv, vec) / (l2_norm(cv) * l2_norm(vec))
-    )
+    sims = F.transform(cent_lit, lambda cv: cosine(cv, vec))
     best = F.array_position(sims, F.array_max(sims)) - 1
     return fan_out(corpus, id_col).withColumn("centroid_id", best.cast("int"))
 
@@ -245,14 +242,13 @@ def ivf_topk(
         .join(F.broadcast(q), on="query_id")
         .where(F.col(id_col) != F.col("query_id"))
     )
-    cos = dot_product(as_double_vec(F.col(vec_col)), F.col("_qv")) / (
-        l2_norm(as_double_vec(F.col(vec_col))) * l2_norm(F.col("_qv"))
-    )
+    cos = cosine(as_double_vec(F.col(vec_col)), F.col("_qv"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col(id_col)
     )
     return (
         cand.withColumn("cosine", F.round(cos, 6))
+        .where(F.col("cosine").isNotNull())
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine")
@@ -333,27 +329,12 @@ def embedding_near_duplicates(
     b = hyperplane_lsh_buckets(
         ids_buckets, num_planes, dim, seed, id_col, vec_col, num_tables
     ).select(id_col, "lsh_table", "lsh_bucket")
-    l = b.select(F.col(id_col).alias("id_a"), "lsh_table", "lsh_bucket")
-    r = b.select(F.col(id_col).alias("id_b"), "lsh_table", "lsh_bucket")
-    cands = (
-        l.join(r, on=["lsh_table", "lsh_bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = _bucket_pairs(b, id_col, ["lsh_table", "lsh_bucket"])
     vecs = df.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("_v"))
-    pairs = cands.join(
-        vecs.select(F.col(id_col).alias("id_a"), F.col("_v").alias("_va")),
-        on="id_a",
-    ).join(
-        vecs.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_vb")),
-        on="id_b",
-    )
-    cos = dot_product(F.col("_va"), F.col("_vb")) / (
-        l2_norm(F.col("_va")) * l2_norm(F.col("_vb"))
-    )
+    cos = cosine(F.col("_v_a"), F.col("_v_b"))
     return (
-        pairs.withColumn("cosine", F.round(cos, 6))
+        _with_sides(cands, vecs, vecs, id_col, "_v")
+        .withColumn("cosine", F.round(cos, 6))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

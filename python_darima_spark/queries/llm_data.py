@@ -40,9 +40,8 @@ from python_darima_spark.operators.dedup import (
 )
 from python_darima_spark.operators.similarity import (
     as_double_vec,
+    cosine,
     cosine_topk,
-    dot_product,
-    l2_norm,
     embedding_near_duplicates,
     ivf_topk,
     pq_encode,
@@ -155,7 +154,8 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
-    """Word-3-gram Jaccard pairs ≥ 0.3 via the prefix-filter inverted index (round 5; was length-bucket blocking — see ngram_jaccard_pairs docstring for the sf1 degeneracy that forced the rewrite).
+    """Word-3-gram Jaccard pairs ≥ 0.3 over all doc pairs, candidates from
+    the counting prefix filter (operators/dedup.py ngram_jaccard_pairs).
     SQL-matched: the oracle restates shingling + intersect/union in DuckDB
     list functions."""
     docs = load(spark, sf, "documents")
@@ -493,11 +493,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf: str) -> DataFrame:
     corpus = ensure_parallelism(emb.where(F.col("vec_id") % 50 != 0))
     c = corpus.select("vec_id", as_double_vec(F.col("embedding")).alias("_cv"))
     q = ev.select(as_double_vec(F.col("embedding")).alias("_qv"))
-    cos = F.round(
-        dot_product(F.col("_cv"), F.col("_qv"))
-        / (l2_norm(F.col("_cv")) * l2_norm(F.col("_qv"))),
-        6,
-    )
+    cos = F.round(cosine(F.col("_cv"), F.col("_qv")), 6)
     return (
         c.crossJoin(F.broadcast(q))
         .groupBy("vec_id")
@@ -2283,11 +2279,10 @@ _NGRAM_ORACLE = """WITH g AS (
                     list_distinct(list_transform(
                         generate_series(1, greatest(len(string_split(lower(text), ' ')) - 2, 1)),
                         i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')
-                    )) AS grams,
-                    CAST(len(string_split(lower(text), ' ')) / 64 AS INT) AS blk
+                    )) AS grams
              FROM documents
            ), sz AS (
-             SELECT doc_id, len(grams) AS n, blk FROM g
+             SELECT doc_id, len(grams) AS n FROM g
            ), e AS (
              SELECT doc_id, unnest(grams) AS gram FROM g
            ), inter AS (
@@ -2301,8 +2296,7 @@ _NGRAM_ORACLE = """WITH g AS (
              FROM inter
              JOIN sz sa ON sa.doc_id = inter.id_a
              JOIN sz sb ON sb.doc_id = inter.id_b
-             WHERE abs(sa.blk - sb.blk) <= 1
-               AND least(sa.n, sb.n) >= 0.3 * greatest(sa.n, sb.n)
+             WHERE least(sa.n, sb.n) >= 0.3 * greatest(sa.n, sb.n)
            )
            SELECT id_a, id_b, round(i / (s - i), 6) AS jaccard
            FROM p WHERE i / (s - i) >= 0.3"""

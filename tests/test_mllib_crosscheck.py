@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_darima_spark.operators.dedup import (
-    char_shingles,
+    doc_shingle_gids,
     minhash_near_duplicates,
 )
 
@@ -27,8 +27,10 @@ THRESHOLD = 0.5
 @pytest.fixture(scope="module")
 def shingled(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs, docs.select(
-        "doc_id", F.array_distinct(char_shingles("text", 5)).alias("sh")
+    # each doc's distinct 5-shingles as gid strings (CountVectorizer
+    # takes string tokens)
+    return docs, doc_shingle_gids(docs).groupBy("doc_id").agg(
+        F.collect_list(F.col("gid").cast("string")).alias("sh")
     ).persist()
 
 

@@ -1,9 +1,7 @@
-"""Property-based tests (hypothesis) for the round-5 candidate
-generators — the two places where a recall bug would be silent: the
-df-ranked prefix filter behind ngram_jaccard_pairs (rewritten in round
-5 after the length-bucket blocking degenerated at sf1) and
-containment_pairs' ratio-aware estimate prefilter (rewritten after a
-fixed-margin version was shown to drop asymmetric true pairs). Oracles
+"""Property-based tests (hypothesis) for the counting prefix filter,
+the place where a recall bug would be silent: it generates the
+candidates of both ngram_jaccard_pairs (word 3-gram Jaccard) and
+containment_pairs (shingle containment in either direction). Oracles
 are single-node brute-force set computations.
 
 Example counts are small: every example is a full Spark round trip.
@@ -98,10 +96,10 @@ def test_containment_equals_bruteforce(spark, corpus, nest):
 
 
 # --- r10: the ASCII byte-slice shingle fast path ----------------------------
-# doc_shingle_gids / minhash_signatures / char_shingles slice the UTF-8
-# BYTES for all-ASCII rows (string `substring` re-scans from the head —
-# O(len²) per doc) and keep the exact char path otherwise. The two paths
-# must be value-identical on any input, ASCII or not.
+# doc_shingle_gids / minhash_signatures slice the UTF-8 BYTES for all-ASCII
+# rows (string `substring` re-scans from the head — O(len²) per doc) and
+# keep the exact char path otherwise. The two paths must be value-identical
+# on any input, ASCII or not.
 
 UNICODE_DOC = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FFF),
@@ -114,10 +112,7 @@ UNICODE_DOC = st.text(
 @settings(**_SETTINGS)
 def test_shingle_gid_fast_path_equals_char_path(spark, texts):
     from pyspark.sql import functions as F
-    from python_darima_spark.operators.dedup import (
-        char_shingles,
-        doc_shingle_gids,
-    )
+    from python_darima_spark.operators.dedup import doc_shingle_gids
 
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     df = spark.createDataFrame(pdf)
@@ -143,23 +138,3 @@ def test_shingle_gid_fast_path_equals_char_path(spark, texts):
         .collect()
     }
     assert got == want
-    # char_shingles: same arrays either branch
-    got_arr = {
-        (r.doc_id, tuple(r.s))
-        for r in df.select(
-            "doc_id", F.array_sort(char_shingles("text", 5)).alias("s")
-        ).collect()
-    }
-    want_arr = {
-        (r.doc_id, tuple(r.s))
-        for r in df.select(
-            "doc_id",
-            F.array_sort(
-                F.expr(
-                    "transform(sequence(1, greatest(length(text) - 4, 1),"
-                    " 1), i -> substring(text, i, 5))"
-                )
-            ).alias("s"),
-        ).collect()
-    }
-    assert got_arr == want_arr
