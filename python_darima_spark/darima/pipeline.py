@@ -13,9 +13,14 @@ Engine lifecycle (SURVEY.md §3, target): every stage stays a DataFrame op —
 
 Per-series parallelism comes from ``groupBy(series_id, window_id)`` over
 many series; the driver never materializes a series (the reference collects
-the full train series at darima.py:96-97 — its scalability cliff). The only
-driver-sized data is nothing at all: even combined coefficient vectors
-(≤ tol+3 doubles per series) stay distributed until the caller collects.
+the full train series at darima.py:96-97 — its scalability cliff).
+
+:func:`darima` runs the fit, the combine and the forecast once per call:
+it checkpoints the combined coefficients (≤ tol+3 doubles per series) and
+the forecasts (series × h rows) into executor storage with an eager
+``localCheckpoint``, and every frame it returns reads those blocks. The
+driver still holds no series data. ``fit_windows``, ``combine_coefs``,
+``forecast``, ``fitted_values`` and ``evaluate`` stay lazy building blocks.
 """
 
 from __future__ import annotations
@@ -273,8 +278,12 @@ def forecast(
 
     def fc_one(sid, ts, y, beta0, beta1, pi, sigma2) -> dict:
         T = y.size
-        # step inferred from the first two points (reference darima.py:316)
-        dt = (ts[1] - ts[0]) if T > 1 else np.timedelta64(1, "h")
+        # the step is the smallest positive gap between observed points:
+        # the first two (reference darima.py:316) are one step apart only
+        # when no row between them was dropped as unobserved
+        gaps = np.diff(ts)
+        gaps = gaps[gaps > np.timedelta64(0)]
+        dt = gaps.min() if gaps.size else np.timedelta64(1, "h")
         t_idx = np.arange(T + 1, T + h + 1, dtype=float)  # 1-based time index
         mean = ar_recursion(beta0 + beta1 * t_idx, pi[: min(tol, T)], init=y)
         se = np.sqrt(sigma2 * np.cumsum(ar_to_ma(pi, h) ** 2))
@@ -399,6 +408,11 @@ def score(eval_df: DataFrame, cfg: DarimaConfig) -> DataFrame:
 
 @dataclass
 class DarimaResult:
+    """What :func:`darima` computed. ``coefs`` and ``forecasts`` are
+    checkpointed frames; ``evaluation`` and ``scores`` are lazy JVM joins
+    and aggregates over the forecast checkpoint. None of them runs the fit
+    or the forecast again, whichever is read first or how often."""
+
     coefs: DataFrame
     forecasts: DataFrame | None = None
     evaluation: DataFrame | None = None
@@ -414,16 +428,30 @@ def darima(
     ts_col: str = "ts",
     y_col: str = "y",
 ) -> DarimaResult:
-    """Full pipeline: split → fit → combine [→ forecast → evaluate]."""
+    """Full pipeline: split → fit → combine [→ forecast → evaluate].
+
+    The call is eager. It runs the fit and the combine and stores the
+    combined coefficients (≤ tol+3 doubles per series) with
+    ``localCheckpoint(eager=True)``; when ``h`` or ``test_df`` is given it
+    runs the forecast and stores it (series × h rows) the same way. The
+    returned frames read those checkpoints, so the caller can read any of
+    them, in any order, without fitting again. Their lineage is truncated
+    at the checkpoint, so blocks lost with an executor cannot be
+    recomputed; the blocks are released when the frames are garbage
+    collected. For a lazy plan, compose :func:`fit_windows`,
+    :func:`combine_coefs` and :func:`forecast` directly.
+    """
     cfg = cfg or DarimaConfig()
     coef_rows = fit_windows(train_df, cfg, series_col, ts_col, y_col)
-    coefs = combine_coefs(coef_rows, cfg)
+    coefs = combine_coefs(coef_rows, cfg).localCheckpoint(eager=True)
     if h is None and test_df is None:
         return DarimaResult(coefs=coefs)
     if h is None:
         h_rows = test_df.groupBy(series_col).count().agg(F.max("count")).collect()
         h = int(h_rows[0][0])
-    fc = forecast(train_df, coefs, h, cfg, series_col, ts_col, y_col)
+    fc = forecast(train_df, coefs, h, cfg, series_col, ts_col, y_col).localCheckpoint(
+        eager=True
+    )
     if test_df is None:
         return DarimaResult(coefs=coefs, forecasts=fc)
     ev = evaluate(fc, test_df, train_df, cfg, series_col, ts_col, y_col)

@@ -314,9 +314,9 @@ def test_evaluate_scale_join_not_pinned_broadcast(spark):
     assert "AdaptiveSparkPlan" in physical
 
 
-def test_full_pipeline_two_series(spark):
-    """End-to-end: 2 series, fit+combine+forecast+evaluate; sane metrics."""
-    cfg = DarimaConfig(num_windows=2, period=1, tol=20, max_p=3, max_q=0, max_P=0)
+@pytest.fixture(scope="module")
+def two_series(spark):
+    """Two AR(1) series, 400 hourly training and 20 test points each."""
     train = pd.concat(
         [
             _series_pdf(_ar1(400, phi=0.5, mu=10.0, seed=1), "a"),
@@ -329,9 +329,14 @@ def test_full_pipeline_two_series(spark):
             _series_pdf(_ar1(20, phi=0.7, mu=-5.0, seed=4), "b", start=T0 + dt.timedelta(hours=400)),
         ]
     )
-    res = darima(
-        spark.createDataFrame(train), cfg, test_df=spark.createDataFrame(test)
-    )
+    return spark.createDataFrame(train), spark.createDataFrame(test)
+
+
+def test_full_pipeline_two_series(spark, two_series):
+    """End-to-end: 2 series, fit+combine+forecast+evaluate; sane metrics."""
+    cfg = DarimaConfig(num_windows=2, period=1, tol=20, max_p=3, max_q=0, max_P=0)
+    train, test = two_series
+    res = darima(train, cfg, test_df=test)
     coefs = res.coefs.toPandas()
     assert set(coefs["series_id"]) == {"a", "b"}
     assert len(coefs) == 2 * 23  # beta0, beta1, ar1..20, sigma2
@@ -383,3 +388,56 @@ def test_nan_training_value_is_no_dlsa_observation(spark):
     assert sorted(got.index) == sorted(want.index)
     for k in want.index:
         assert got[k] == pytest.approx(want[k], rel=1e-12), k
+
+
+@pytest.mark.parametrize("method", ["mean", "dlsa"])
+def test_darima_equals_lazy_composition(spark, two_series, method):
+    """The checkpointed result holds what the lazy building blocks
+    compute: the same combined coefficients bit for bit (two windows, so
+    the combine's sums cannot depend on merge order) and the same
+    forecasts."""
+    cfg = DarimaConfig(
+        num_windows=2, period=1, tol=20, method=method, max_p=3, max_q=0, max_P=0
+    )
+    train, _ = two_series
+    res = darima(train, cfg, h=10)
+    lazy_coefs = combine_coefs(fit_windows(train, cfg), cfg)
+    keys = ["series_id", "coef"]
+    got = res.coefs.toPandas().sort_values(keys).reset_index(drop=True)
+    want = lazy_coefs.toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    keys = ["series_id", "step"]
+    got = res.forecasts.toPandas().sort_values(keys).reset_index(drop=True)
+    want = (
+        forecast(train, lazy_coefs, 10, cfg).toPandas().sort_values(keys).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12, atol=0)
+
+
+def test_darima_fits_and_forecasts_once(spark, two_series):
+    """Every frame of the result reads the checkpoints ``darima`` took:
+    no plan holds the fit UDF or the forecast cogroup, so reading several
+    frames does not fit or forecast again."""
+    cfg = DarimaConfig(num_windows=2, period=1, tol=20, max_p=3, max_q=0, max_P=0)
+    train, test = two_series
+    res = darima(train, cfg, test, h=20)
+    for name in ("coefs", "forecasts", "evaluation", "scores"):
+        plan = getattr(res, name)._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, name
+        assert "FlatMapCoGroupsInPandas" not in plan, name
+
+
+def test_forecast_step_ignores_missing_second_row(spark):
+    """A null y at hour 1 drops that row from the forecast's input; the
+    step is still one hour, so the forecast continues the hourly grid and
+    every test row is scored."""
+    cfg = DarimaConfig(num_windows=2, period=1, tol=10, max_p=3, max_q=0, max_P=0)
+    sdf = _with_y_at(spark.createDataFrame(_series_pdf(_ar1(300))), 1, F.lit(None).cast("double"))
+    test = spark.createDataFrame(
+        _series_pdf(_ar1(5, seed=1), start=T0 + dt.timedelta(hours=300))
+    )
+    res = darima(sdf, cfg, test)
+    fc = res.forecasts.orderBy("step").toPandas()
+    want = [T0 + dt.timedelta(hours=300 + i) for i in range(5)]
+    assert fc["ts"].tolist() == want
+    assert res.evaluation.count() == 5
