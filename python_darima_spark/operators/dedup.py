@@ -32,7 +32,8 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from python_darima_spark.operators import (
@@ -1065,6 +1066,79 @@ def containment_pairs(
     return result
 
 
+def _broadcast_bytes(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes: ``10485760b``,
+    ``10m`` and ``-1`` (off) all read back as the conf's JVM byte string."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    num = raw.rstrip("kmgtpb")
+    shift = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+    return int(num) << shift[raw[len(num):].removesuffix("b")]
+
+
+def _signed_checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eager ``localCheckpoint`` of a distinct ``(u, v)`` edge list and its
+    order-independent set checksum, observed in the same job: the exact
+    count and an xor-fold of 64-bit edge hashes (associative, and it
+    cannot overflow under ANSI mode)."""
+    obs = Observation()
+    e = e.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
+    ).localCheckpoint(eager=True)
+    sig = obs.get
+    return e, (sig["n"], sig["h"])
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    """One LARGE-STAR + SMALL-STAR round (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) over a distinct edge
+    list. Large-star attaches each node's STRICTLY LARGER neighbors to the
+    min of its closed neighborhood; small-star attaches its smaller
+    neighbors (and itself) to their min. Returns distinct ``u > v`` edges:
+    every node with an edge and every component's connectivity survive."""
+    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    lmin = (
+        sym.groupBy("u")
+        .agg(F.min("v").alias("_mn"))
+        .select("u", F.least("u", "_mn").alias("m"))
+    )
+    large = (
+        sym.join(lmin, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    d = large.select(F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b"))
+    pairs = d.join(d.groupBy("a").agg(F.min("b").alias("m")), "a")
+    return (
+        pairs.select(F.col("b").alias("u"), F.col("m").alias("v"))
+        .union(pairs.select(F.col("a").alias("u"), F.col("m").alias("v")))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _min_root_labels(edges: pd.DataFrame) -> pd.DataFrame:
+    """Union-find over ``(u, v)`` edges with every root at its component's
+    min id; returns ``(u, label)`` for each non-root node, label that id."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(edges["u"].tolist(), edges["v"].tolist()):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    moved = {x: r for x in list(parent) if (r := find(x)) != x}
+    return pd.DataFrame(
+        {"u": list(moved), "label": list(moved.values())}, dtype="int64"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -1073,168 +1147,59 @@ def connected_components(
     dst_col: str = "id_b",
     max_iterations: int = 25,
 ) -> DataFrame:
-    """Cluster near-duplicate PAIRS into components and label every node
-    with its component's min id — the step between pair detection and
-    canonical-document selection in a dedup pipeline (keep one doc per
-    cluster, drop the rest).
+    """Cluster near-duplicate PAIRS into components: ``(id_col,
+    cluster_id)`` for every distinct id of ``nodes``, ``cluster_id`` its
+    component's min id (its own id if it has no edge) — the step between
+    pair detection and keeping one doc per cluster. Ids compare as longs;
+    an edge to an id outside ``nodes`` links nothing.
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels — one shuffle join + one
-    aggregate per round, all distributed; the driver sees only a scalar
-    convergence count. Rounds needed = graph diameter, and near-dup
-    clusters are overwhelmingly tiny (pairs/triples — diameter 2-3), so
-    this converges in a handful of rounds; ``max_iterations`` guards the
-    pathological chain, raising ``RuntimeError`` rather than returning
-    partial labels. For graphs with genuinely large diameter switch
-    to the large-star/small-star contraction (Kiveris et al.), which the
-    same join shape expresses in O(log n) rounds.
-
-    Each round's result is ``localCheckpoint(eager)``-ed: iterative
-    DataFrame loops otherwise stack a lineage of joins that deepens the
-    plan every round (re-planned from scratch each action — quadratic
-    planning cost and an eventual stack overflow at scale).
+    The edges are checkpointed once and signed in the same job, with an
+    exact count (:func:`_signed_checkpoint`). While they outnumber the cap,
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes ÷ 16 per edge (655k
+    edges at the 10 MB default), checkpointed star rounds contract them,
+    O(log n) rounds in all. Once they fit, the driver collects them
+    (Arrow), runs a union-find and broadcasts the labels back, so a
+    near-dup graph costs one signed checkpoint and one collect. Star
+    rounds keep every component's nodes and connectivity, so a switch
+    partway gives the fixpoint's labels. A threshold of ``-1`` runs the
+    rounds to the star fixpoint instead, where every node points at its
+    component min. Past ``max_iterations`` rounds it raises
+    ``RuntimeError`` rather than return partial labels.
     """
-    # Materialize the symmetrized edge list ONCE: the loop joins it every
-    # round, and the edge subtree is typically the expensive part (here a
-    # full near-dup pair pipeline). Without this each round re-runs pair
-    # generation from scratch.
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = nodes.select(F.col(id_col).alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_label", F.col("label")) < F.col("label")).alias(
-                    "_changed"
-                ),
-            )
-        )
-        updated = updated.localCheckpoint(eager=True)
-        changed = updated.where("_changed").limit(1).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
-            return labels.select(
-                F.col("node").alias(id_col), F.col("label").alias("cluster_id")
-            )
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components by LARGE-STAR / SMALL-STAR contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round companion to ``connected_components``'s
-    O(diameter) label propagation. Same contract: every node labeled
-    with its component's min id.
-
-    Per round, two keyed aggregates + joins over the current edge list:
-
-    * large-star: each node attaches all STRICTLY LARGER neighbors to
-      the minimum of its closed neighborhood — long tails collapse
-      toward small ids without growing any adjacency;
-    * small-star: each node attaches its smaller-or-equal neighbors
-      (and itself) to their minimum — stars flatten.
-
-    Near-dup graphs (diameter 2-3) don't need this; it exists for the
-    big-diameter regimes label propagation can't afford (chains from
-    transitive similarity, URL graphs). Iteration state is
-    ``localCheckpoint``-ed per phase for the same lineage reason as the
-    propagation loop; the edge list never grows beyond the distinct
-    (node, min) pairs, so every round is a bounded shuffle."""
-    e = (
+    spark = edges.sparkSession
+    ids = nodes.select(F.col(id_col)).distinct()
+    # one node-id plan on both sides, so the two semi-joins share a broadcast
+    known = nodes.select(F.col(id_col).cast("long").alias("_n"))
+    e, sig = _signed_checkpoint(
         edges.select(
-            F.col(src_col).cast("long").alias("u"),
-            F.col(dst_col).cast("long").alias("v"),
+            F.col(src_col).cast("long").alias("a"),
+            F.col(dst_col).cast("long").alias("b"),
         )
-        .where(F.col("u") != F.col("v"))
+        .where(F.col("a") != F.col("b"))
+        .join(known, F.col("a") == F.col("_n"), "left_semi")
+        .join(known, F.col("b") == F.col("_n"), "left_semi")
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
-        # large-star over the symmetric adjacency
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        lmin = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("u", "_mn").alias("m"))
-        )
-        large = (
-            sym.join(lmin, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the large→small orientation
-        d = large.select(
-            F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
-        )
-        smin = d.groupBy("a").agg(F.min("b").alias("m"))
-        pairs = d.join(smin, "a")
-        small = (
-            pairs.select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .union(pairs.select(F.col("a").alias("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        new_e = small.localCheckpoint(eager=True)
-        # order-independent set checksum (count + xor-fold of 64-bit
-        # edge hashes — xor is associative/commutative and cannot
-        # overflow under ANSI mode) instead of two exceptAll passes:
-        # one 1-row aggregate per phase vs two shuffled anti joins —
-        # the distinct() above already guarantees both sides are sets
-        def _sig(df: DataFrame) -> tuple:
-            row = df.agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-            ).first()
-            return (row["n"], row["h"])
-
-        stable = _sig(new_e) == _sig(e)
-        e = new_e
-        if stable:
+    cap, rounds = _broadcast_bytes(spark) // 16, 0
+    while sig[0] > cap:
+        if rounds == max_iterations:
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"{max_iterations} rounds (expected O(log n)); raise max_iterations"
+            )
+        new_e, new_sig = _signed_checkpoint(_star_round(e))
+        rounds += 1
+        if new_sig == sig:  # fixpoint: each non-root points at its min
+            labels = e.groupBy("u").agg(F.min("v").alias("label"))
             break
-    else:
-        # the final groupBy(u).min(v) below is only correct at the star
-        # fixpoint; labeling from an intermediate edge list would return
-        # silently-wrong clusters
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iterations} iterations (expected O(log n) rounds); "
-            f"raise max_iterations"
-        )
-    # at convergence every non-root points directly at its component min
-    final = e.groupBy("u").agg(F.min("v").alias("_label"))
-    return (
-        nodes.select(F.col(id_col))
-        .distinct()
-        .join(final, F.col(id_col) == F.col("u"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("_label", F.col(id_col)).alias("cluster_id"),
-        )
+        e, sig = new_e, new_sig
+    else:  # the edges fit a broadcast: finish on the driver
+        pdf = _min_root_labels(e.toPandas())
+        labels = F.broadcast(spark.createDataFrame(pdf, "u long, label long"))
+    id_type = ids.schema[id_col].dataType
+    on = F.col(id_col).cast("long") == labels["u"]
+    return ids.join(labels, on, "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("label").cast(id_type), F.col(id_col)).alias("cluster_id"),
     )

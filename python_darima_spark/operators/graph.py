@@ -75,8 +75,8 @@ def pagerank(
     table, round-10 plan audit) the precomputed teleport-floor rows
     are unioned in — identical values (``base + d·0``), one equi-join
     per iteration instead of two. For iteration counts beyond ~20,
-    checkpoint ``ranks`` every few rounds too (same guidance as the
-    label-propagation loop in operators/dedup.py).
+    checkpoint ``ranks`` every few rounds too (as the star rounds of
+    ``connected_components`` in operators/dedup.py do every round).
     """
     e = (
         edges.select(

@@ -31,6 +31,7 @@ from python_darima_spark.operators import (
     source_mixture_rates,
 )
 from python_darima_spark.operators.dedup import (
+    connected_components,
     containment_pairs,
     dedup_exact,
     minhash_incremental,
@@ -166,12 +167,12 @@ def q_dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_dedup_cluster(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs → CLUSTERS: connected components over the n-gram
-    Jaccard pair graph (min-label propagation, one shuffle join per
-    round), labeling every doc with its cluster's min doc_id and whether
-    it is the canonical keeper. This is the step a real dedup pipeline
-    runs between pair detection and dropping non-canonical docs."""
-    from python_darima_spark.operators.dedup import connected_components
-
+    Jaccard pair graph (operators/dedup.py:connected_components — star
+    contraction while the edge list is large, a driver-side union-find
+    once it fits a broadcast), labeling every doc with its cluster's min
+    doc_id and whether it is the canonical keeper. This is the step a
+    real dedup pipeline runs between pair detection and dropping
+    non-canonical docs."""
     docs = load(spark, sf, "documents")
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.3)
     comp = connected_components(pairs, docs, "doc_id")
@@ -183,23 +184,12 @@ def q_dedup_cluster(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_dedup_cluster_star(spark: SparkSession, sf: str) -> DataFrame:
-    """q_dedup_cluster's LARGE-STAR/SMALL-STAR twin: identical pair
-    graph and labeling contract, but components come from the O(log n)-
-    round contraction (operators/dedup.py:connected_components_star)
-    instead of O(diameter) label propagation — the algorithm a 100 TB
-    graph with long transitive-similarity chains needs. Shares
-    q_dedup_cluster's recursive-CTE oracle verbatim: the algorithm swap
-    must be result-invisible."""
-    from python_darima_spark.operators.dedup import connected_components_star
-
-    docs = load(spark, sf, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.3)
-    comp = connected_components_star(pairs, docs, "doc_id")
-    return comp.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("cluster_id") == F.col("doc_id")).alias("is_canonical"),
-    )
+    """q_dedup_cluster's twin registry entry: the same pair graph, operator
+    and labeling contract, kept under its own name for the O(log n)-round
+    star contraction that a graph too large to broadcast (long transitive-
+    similarity chains at 100 TB) runs on. Shares q_dedup_cluster's
+    recursive-CTE oracle verbatim."""
+    return q_dedup_cluster(spark, sf)
 
 
 def q_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
@@ -4039,8 +4029,7 @@ QUERIES = {
         _CLUSTER_ORACLE,
     ),
     # the star-contraction twin shares the SAME recursive-CTE oracle
-    # (the q_join_salted shared-oracle pattern): an algorithm change
-    # must be result-invisible
+    # (the q_join_salted shared-oracle pattern)
     "q_dedup_cluster_star": QuerySpec(
         q_dedup_cluster_star,
         _CLUSTER_ORACLE,

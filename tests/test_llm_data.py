@@ -3,6 +3,8 @@ found, approximate paths must agree with exact baselines (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -887,20 +889,65 @@ def test_connected_components_topology(spark):
     }
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str | None):
+    """Run with ``spark.sql.autoBroadcastJoinThreshold`` at ``value`` (None
+    leaves it as is): it sets connected_components' local-finish cap, and
+    ``-1`` forces the distributed star rounds to their fixpoint."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value or prev)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """Counts connected_components' distributed star rounds."""
+    from python_darima_spark.operators import dedup
+
+    calls = []
+    round_ = dedup._star_round
+    monkeypatch.setattr(
+        dedup, "_star_round", lambda e: calls.append(1) or round_(e)
+    )
+    return calls
+
+
+def _chain(spark, n: int):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    return edges, spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+
+
 def test_connected_components_raises_when_not_converged(spark):
-    """A path of 8 nodes needs 7 propagation rounds plus one that changes
-    nothing: 3 rounds must raise, not return partial labels."""
+    """On the forced star path a 100-node chain needs several rounds: one
+    round must raise, not return partial labels. The default call
+    finishes locally and labels every node 0."""
     from python_darima_spark.operators.dedup import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, "doc_id", max_iterations=3)
+    edges, nodes = _chain(spark, 100)
+    with _broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(edges, nodes, "doc_id", max_iterations=1)
     out = connected_components(edges, nodes, "doc_id").toPandas()
-    assert sorted(out.doc_id) == list(range(8))
+    assert sorted(out.doc_id) == list(range(100))
     assert (out.cluster_id == 0).all(), out
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["local", "star"])
+def test_connected_components_edge_outside_nodes_links_nothing(spark, threshold):
+    """Edges (0,1), (1,5) over nodes {1, 5}: 0 is no node, so the edge to
+    it is dropped and 1–5 cluster under 1, an id that is a node."""
+    from python_darima_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame([(0, 1), (1, 5)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(1,), (5,)], "doc_id long")
+    with _broadcast_threshold(spark, threshold):
+        got = dict(connected_components(edges, nodes, "doc_id").collect())
+    assert got == {1: 1, 5: 1}
 
 
 def test_containment_finds_doc_inside_doc_jaccard_misses(spark):
@@ -993,43 +1040,45 @@ def test_classifier_recovers_planted_signal(spark):
 
 
 def test_star_contraction_chain_converges_in_log_rounds(spark):
-    # a 100-node chain (diameter 99): label propagation needs ~99
+    # a 100-node chain (diameter 99): label propagation would need ~99
     # rounds; large-star/small-star must finish inside 12 — if it
     # contracted one hop per round the labels would still be wrong at
     # the cap, so correctness here IS the O(log n) convergence proof
-    from python_darima_spark.operators.dedup import connected_components_star
+    from python_darima_spark.operators.dedup import connected_components
 
-    n = 100
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    out = connected_components_star(
-        edges, nodes, "doc_id", max_iterations=12
-    ).toPandas()
+    edges, nodes = _chain(spark, 100)
+    with _broadcast_threshold(spark, "-1"):
+        out = connected_components(
+            edges, nodes, "doc_id", max_iterations=12
+        ).toPandas()
     assert (out.cluster_id == 0).all(), out.cluster_id.value_counts()
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    # same contract as connected_components on a multi-component graph
-    from python_darima_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_local_star_and_switch_agree(spark, star_rounds):
+    # a 10-clique (45 edges, 9 after one round), a 21-node chain, a
+    # triangle and a singleton: the local finish, the star fixpoint and a
+    # 40-edge cap that switches to the local finish partway must agree,
+    # and a graph under the default cap must run no star round at all
+    import itertools
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (12, 11), (20, 21), (21, 22), (22, 20)],
-        "id_a long, id_b long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 10, 11, 12, 20, 21, 22, 99]], "doc_id long"
-    )
-    a = connected_components(edges, nodes, "doc_id").toPandas()
-    b = connected_components_star(edges, nodes, "doc_id").toPandas()
-    ma = dict(zip(a.doc_id, a.cluster_id))
-    mb = dict(zip(b.doc_id, b.cluster_id))
-    assert ma == mb, (ma, mb)
-    assert mb[99] == 99  # isolated node labels itself
+    from python_darima_spark.operators.dedup import connected_components
+
+    pairs = list(itertools.combinations(range(10), 2))
+    pairs += [(i, i + 1) for i in range(20, 40)] + [(50, 51), (51, 52), (52, 50)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    ids = list(range(10)) + list(range(20, 41)) + [50, 51, 52, 99]
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    runs = {}
+    for name, threshold in [("local", None), ("star", "-1"), ("switch", "640")]:
+        star_rounds.clear()
+        with _broadcast_threshold(spark, threshold):
+            runs[name] = dict(connected_components(edges, nodes, "doc_id").collect())
+        runs[name + "_rounds"] = len(star_rounds)
+    assert runs["local"] == runs["star"] == runs["switch"]
+    assert runs["local"][9] == 0 and runs["local"][40] == 20
+    assert runs["local"][52] == 50 and runs["local"][99] == 99
+    assert runs["local_rounds"] == 0
+    assert 0 < runs["switch_rounds"] < runs["star_rounds"]
 
 
 def test_pq_codes_compact_and_twin_ranks_first(spark):
