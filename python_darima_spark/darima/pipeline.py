@@ -357,11 +357,14 @@ def evaluate(
     """
     m = cfg.period
     w = Window.partitionBy(series_col).orderBy(ts_col)
+    # a NaN y becomes null before the lag: no observation, as a null is,
+    # but its row stays, so the lag still spans m rows
     scale = (
-        train_df.withColumn("_lag", F.lag(y_col, m).over(w))
+        train_df.withColumn("_y", F.when(_observed(y_col), F.col(y_col)))
+        .withColumn("_lag", F.lag("_y", m).over(w))
         .where(F.col("_lag").isNotNull())
         .groupBy(series_col)
-        .agg(F.avg(F.abs(F.col(y_col) - F.col("_lag"))).alias("_scale"))
+        .agg(F.avg(F.abs(F.col("_y") - F.col("_lag"))).alias("_scale"))
     )
     joined = (
         forecast_df.alias("f")

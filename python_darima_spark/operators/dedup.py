@@ -22,6 +22,15 @@ on sorted gid arrays. Scale notes per operator:
                 tokens against an inverted index, recall 1.0 by a
                 deterministic bound.
 
+MinHash runs one fixed configuration: 64 hashes in 16 bands of 4 rows,
+hash coefficients drawn from seed 42, over char 5-shingles. It is fixed
+because the rest of the path is derived from it: the estimate
+prefilter's ``threshold − 0.2`` margin is ≈3.5σ at 64 hashes, the
+banding recall bounds quoted below assume b = 16, r = 4 (S-curve
+threshold (1/b)^(1/r) = 0.5; Leskovec, Rajaraman & Ullman, *Mining of
+Massive Datasets*, §3.4), and a persisted index is only probed correctly
+with the signatures and band keys it was written with.
+
 ANSI-mode note: Spark 4 throws on bigint overflow, so the universal-hash
 family (a·h+b) mod p keeps h < 2³² and a,b < 2³⁰ — products stay < 2⁶²
 and never overflow, whatever spark.sql.ansi.enabled is set to.
@@ -49,6 +58,14 @@ from python_darima_spark.operators.ledger import (
 # Prime just above 2^32: keeps the base hash domain small enough that the
 # affine family (a*h + b) % P never overflows a signed 64-bit value.
 _MERSENNE_P = 4294967311
+
+# The one MinHash configuration (module docstring): 64 (a, b) pairs of the
+# affine family, drawn once, in 16 bands of 4 rows, over char 5-shingles.
+_NUM_HASHES, _NUM_BANDS, _ROWS_PER_BAND, _SHINGLE_K = 64, 16, 4, 5
+_rng = np.random.default_rng(42)
+_HASH_A = _rng.integers(1, 2**30, size=_NUM_HASHES).tolist()
+_HASH_B = _rng.integers(0, 2**30, size=_NUM_HASHES).tolist()
+del _rng
 
 
 def dedup_exact(
@@ -128,7 +145,7 @@ def doc_shingle_gids(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 5,
+    shingle_k: int = _SHINGLE_K,
 ) -> DataFrame:
     """The SHARED corpus shingle stage: one ``(id, gid)`` row per
     DISTINCT shingle per document (NULL texts have none), gid =
@@ -183,66 +200,43 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    seed: int = 42,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature → (id_col, sig: array<bigint>).
 
     Shape matters for speed here: shingles are EXPLODED by
     :func:`_shingle_rows` (no higher-order functions) and each of the
-    ``num_hashes`` minima is a plain codegen'd ``min`` aggregate with
-    map-side partial aggregation, so the only shuffle carries one
-    ``num_hashes``-wide partial row per (task, doc). Duplicate shingles
-    need no dedup — they cannot change a min, which is also why the
-    (distinct-per-doc) shared stage gives identical signatures.
+    64 minima is a plain codegen'd ``min`` aggregate with map-side
+    partial aggregation, so the only shuffle carries one 64-wide partial
+    row per (task, doc). Duplicate shingles need no dedup — they cannot
+    change a min, which is also why the (distinct-per-doc) shared stage
+    gives identical signatures.
 
     ``shingle_gids`` — a :func:`doc_shingle_gids` table (typically the
     family-shared persisted stage) — skips the text scan + explode
     entirely: the base hash is ``pmod(gid, P)``, the same value the
     inline path computes (gid = xxhash64(shingle)).
     """
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 2**30, size=num_hashes)
-    b = rng.integers(0, 2**30, size=num_hashes)
     rows = shingle_gids
     if rows is None:
-        rows = _shingle_rows(df, text_col, id_col, shingle_k)
+        rows = _shingle_rows(df, text_col, id_col, _SHINGLE_K)
     base = rows.select(id_col, F.pmod("gid", F.lit(_MERSENNE_P)).alias("_h"))
     mins = [
         F.min(
-            F.pmod(
-                F.col("_h") * F.lit(int(a[i])) + F.lit(int(b[i])),
-                F.lit(_MERSENNE_P),
-            )
+            F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))
         ).alias(f"_mh{i}")
-        for i in range(num_hashes)
+        for i, (a, b) in enumerate(zip(_HASH_A, _HASH_B))
     ]
     return (
         base.groupBy(id_col)
         .agg(*mins)
         .select(
-            id_col, F.array(*[f"_mh{i}" for i in range(num_hashes)]).alias("sig")
+            id_col, F.array(*[f"_mh{i}" for i in range(_NUM_HASHES)]).alias("sig")
         )
     )
 
 
-def _rows_per_band(num_hashes: int, num_bands: int) -> int:
-    """Signature rows per LSH band. More bands than hashes would make
-    every band an empty slice (every doc pair a candidate), and a
-    remainder would leave the trailing hashes out of every band."""
-    if num_bands < 1 or num_hashes < num_bands or num_hashes % num_bands:
-        raise ValueError(f"num_bands={num_bands} must divide num_hashes={num_hashes}")
-    return num_hashes // num_bands
-
-
-def band_hashes(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    num_bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
+def band_hashes(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Explode a signature table to its LSH band keys:
     ``(id, band_id, band_hash)`` — n·bands skinny rows. Shared by the
     self-join (all-pairs) and probe-vs-index (incremental) shapes."""
@@ -251,10 +245,10 @@ def band_hashes(
             F.struct(
                 F.lit(i).alias("band_id"),
                 F.xxhash64(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
+                    F.slice("sig", i * _ROWS_PER_BAND + 1, _ROWS_PER_BAND)
                 ).alias("band_hash"),
             )
-            for i in range(num_bands)
+            for i in range(_NUM_BANDS)
         ]
     )
     return sig_df.select(F.col(id_col), F.explode(bands).alias("b")).select(
@@ -265,8 +259,6 @@ def band_hashes(
 def minhash_candidate_pairs(
     sig_df: DataFrame,
     id_col: str = "doc_id",
-    num_bands: int = 16,
-    rows_per_band: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band hash become candidate pairs.
@@ -284,7 +276,7 @@ def minhash_candidate_pairs(
     bands, so they survive unless all their bands are hot), while cost
     becomes ≤ cap × bucket rows. Default None keeps the exact banding
     contract the hash-checked oracles verify."""
-    exploded = band_hashes(sig_df, id_col, num_bands, rows_per_band)
+    exploded = band_hashes(sig_df, id_col)
     if max_bucket_size is not None:
         sizes = exploded.groupBy("band_id", "band_hash").agg(
             F.count("*").alias("_bsz")
@@ -328,10 +320,9 @@ def _estimate_prefilter(
     sig_b: DataFrame,
     id_col: str,
     threshold: float,
-    num_hashes: int,
 ) -> DataFrame:
     """The candidate id pairs (``cands``' two columns) whose
-    signature-estimated Jaccard — matching minhashes / num_hashes — is
+    signature-estimated Jaccard — matching minhashes / 64 — is
     at least ``threshold − 0.2``: ≈3.5σ below the target for 64 hashes,
     so true pairs survive while the LSH false positives never reach
     exact verification.
@@ -357,7 +348,7 @@ def _estimate_prefilter(
             sig_b.select(F.col(id_col).alias(b), F.col("sig").alias("_sb")),
             on=b,
         )
-        .where(est_match / F.lit(float(num_hashes)) >= F.lit(threshold - 0.2))
+        .where(est_match / F.lit(float(_NUM_HASHES)) >= F.lit(threshold - 0.2))
         .select(a, b)
         .repartition(shuffle_width(cands.sparkSession))
     )
@@ -434,10 +425,6 @@ def minhash_near_duplicates(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    num_bands: int = 16,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
@@ -450,41 +437,38 @@ def minhash_near_duplicates(
 
     * signatures are ``persist()``-ed — the band self-join and both
       estimate-join sides would otherwise recompute the full
-      scan→shingle→hash subtree (2× faster overall; on a real cluster
-      this is where you'd checkpoint to storage instead);
+      scan→shingle→hash subtree (2× faster overall) — and released once
+      the prefilter's eager checkpoint drops them from the lineage;
     * the Jaccard-estimate prefilter (:func:`_estimate_prefilter`) keeps
       the ~500× excess of LSH false positives from exact verification,
       which builds sorted gid arrays ONLY for candidate docs, from the
       gid table the signatures use — no text re-shingle.
+
+    The (small) result is checkpointed eagerly, so whatever this call
+    persisted is released before it returns.
     """
-    rows_per_band = _rows_per_band(num_hashes, num_bands)
     # inline gids feed TWO consumers (the signature aggregate and the
     # exact-verify arrays) — unpersisted, each replays the corpus
     # scan + shingle explode (the dominant stage; measured ~2 s/replay
     # at sf0.1 inside q_curation_pipeline). A caller-supplied shared
     # stage is the caller's to persist (queries/llm_data._corpus_shingles
-    # does), so only the inline table is persisted here — same
-    # release-by-clearCache lifecycle as `sigs` below.
+    # does), so only the inline table is persisted and released here.
     gids = (
         shingle_gids
         if shingle_gids is not None
-        else doc_shingle_gids(df, text_col, id_col, shingle_k).persist()
+        else doc_shingle_gids(df, text_col, id_col).persist()
     )
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, seed,
-        shingle_gids=gids,
-    ).persist()
-    cands = minhash_candidate_pairs(
-        sigs, id_col, num_bands, rows_per_band, max_bucket_size
+    sigs = minhash_signatures(df, text_col, id_col, shingle_gids=gids).persist()
+    cands = minhash_candidate_pairs(sigs, id_col, max_bucket_size)
+    pre = _estimate_prefilter(cands, sigs, sigs, id_col, threshold)
+    sigs.unpersist()
+    arr = _gid_arrays(gids, _pair_ids(pre, id_col), id_col)
+    result = _jaccard_verify(pre, arr, arr, id_col, threshold).localCheckpoint(
+        eager=True
     )
-    pre = _estimate_prefilter(cands, sigs, sigs, id_col, threshold, num_hashes)
-    cand_ids = (
-        pre.select(F.col("id_a").alias(id_col))
-        .union(pre.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    arr = _gid_arrays(gids, cand_ids, id_col)
-    return _jaccard_verify(pre, arr, arr, id_col, threshold)
+    if shingle_gids is None:
+        gids.unpersist()
+    return result
 
 
 def minhash_incremental(
@@ -493,10 +477,6 @@ def minhash_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    num_bands: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """INCREMENTAL near-dup: probe a NEW batch against an EXISTING corpus
     — the production shape for continuously-ingested training data,
@@ -505,11 +485,10 @@ def minhash_incremental(
     Jaccard ≥ threshold; new-vs-new duplicates are intentionally NOT
     reported (run the all-pairs pass within the batch for those).
 
-    Same hash family and banding as :func:`minhash_near_duplicates`
-    (``seed`` must match the index's), but the band join is
-    new-batch × index instead of a self-join: cost scales with
-    ``|new| · bands`` probe rows against the bucketed index, independent
-    of corpus size per ingest. At scale the index side is a PERSISTED
+    Same hash family and banding as :func:`minhash_near_duplicates`, but
+    the band join is new-batch × index instead of a self-join: cost
+    scales with ``|new| · bands`` probe rows against the bucketed index,
+    independent of corpus size per ingest. At scale the index side is a PERSISTED
     table of (band_id, band_hash, id) bucketed by band key — signatures
     are computed once at ingest and appended by
     :func:`minhash_index_append`, so each increment pays only its own
@@ -526,7 +505,6 @@ def minhash_incremental(
     fixture pairs sit at j ≥ 0.8, where missed-pair probability is
     < 1e-3 per pair).
     """
-    rows_per_band = _rows_per_band(num_hashes, num_bands)
     # NOTE (round 10): wiring the family-shared ``shingle_gids`` stage
     # through here (as minhash_probe_index does) was tried and MEASURED
     # SLOWER (4.6 vs 3.3 s isolated at sf0.1): the new/index slices are
@@ -534,17 +512,11 @@ def minhash_incremental(
     # once in total, fused into the signature aggregates — the shared
     # stage adds a materialization barrier + two semi-joins with no
     # reuse to amortize them (verify shingles only candidate pairs).
-    sig_new = minhash_signatures(
-        new_df, text_col, id_col, num_hashes, shingle_k, seed
-    ).persist()
-    sig_idx = minhash_signatures(
-        index_df, text_col, id_col, num_hashes, shingle_k, seed
-    ).persist()
+    sig_new = minhash_signatures(new_df, text_col, id_col).persist()
+    sig_idx = minhash_signatures(index_df, text_col, id_col).persist()
     result = _probe_verified_pairs(
-        band_hashes(sig_new, id_col, num_bands, rows_per_band),
-        band_hashes(sig_idx, id_col, num_bands, rows_per_band),
-        sig_new, sig_idx, new_df, index_df,
-        text_col, id_col, threshold, num_hashes, shingle_k,
+        band_hashes(sig_new, id_col), band_hashes(sig_idx, id_col),
+        sig_new, sig_idx, new_df, index_df, text_col, id_col, threshold,
     )
     sig_new.unpersist()
     sig_idx.unpersist()
@@ -561,8 +533,6 @@ def _probe_verified_pairs(
     text_col: str,
     id_col: str,
     threshold: float,
-    num_hashes: int,
-    shingle_k: int,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
     """Shared tail of the incremental probe shapes: join the new batch's
@@ -577,7 +547,7 @@ def _probe_verified_pairs(
         .select("id_new", "id_old")
         .distinct()
     )
-    pre = _estimate_prefilter(cands, sig_new, sig_idx, id_col, threshold, num_hashes)
+    pre = _estimate_prefilter(cands, sig_new, sig_idx, id_col, threshold)
     arrs = []
     for docs, side in ((new_df, "id_new"), (old_df, "id_old")):
         # broadcast and not distinct, as in _pair_ids
@@ -585,7 +555,7 @@ def _probe_verified_pairs(
         gids = shingle_gids
         if gids is None:
             gids = doc_shingle_gids(
-                docs.join(ids, id_col, "left_semi"), text_col, id_col, shingle_k
+                docs.join(ids, id_col, "left_semi"), text_col, id_col
             )
         arrs.append(_gid_arrays(gids, ids, id_col))
     return _jaccard_verify(pre, *arrs, id_col, threshold)
@@ -596,10 +566,6 @@ def minhash_index_append(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    num_bands: int = 16,
-    seed: int = 42,
     ingest_tag: str | None = None,
     shingle_gids: DataFrame | None = None,
 ) -> None:
@@ -613,8 +579,7 @@ def minhash_index_append(
     co-located shuffle-free; the path layout here is the
     filesystem-only equivalent. Texts are NOT stored — exact
     verification joins back to the corpus by id, so the index stays
-    skinny (~(8+8·num_hashes) bytes/doc + bands) no matter how large
-    documents are.
+    skinny (~520 bytes/doc + bands) no matter how large documents are.
 
     ``ingest_tag`` makes the append EXACTLY-ONCE under replay: each
     table's batch goes through the two-phase-commit directory protocol
@@ -633,9 +598,8 @@ def minhash_index_append(
     invisible to parquet scans — so the read path stays identical to
     untagged appends (flat layout; the ``ingest=<tag>`` partition-dir
     alternative measured ~2.5× worse probe parallelism at sf1)."""
-    rows_per_band = _rows_per_band(num_hashes, num_bands)
     sig = minhash_signatures(
-        batch_df, text_col, id_col, num_hashes, shingle_k, seed,
+        batch_df, text_col, id_col,
         # a family-shared stage covers the whole corpus; this ingest
         # signs only ITS batch (semi-join on the batch ids)
         shingle_gids=(
@@ -649,10 +613,8 @@ def minhash_index_append(
         # per ingest instead of shuffle-partition-count tiny files per
         # dir (the small-files problem compounds across ingests;
         # measured ~2× faster append+probe round trip at fixture scale)
-        bands = band_hashes(
-            sig, id_col, num_bands, rows_per_band
-        ).repartition(num_bands, "band_id")
-        # sig rows are skinny (id + num_hashes longs); writing them at
+        bands = band_hashes(sig, id_col).repartition(_NUM_BANDS, "band_id")
+        # sig rows are skinny (id + 64 longs); writing them at
         # full shuffle width leaves shuffle-partition-count tiny files
         # PER INGEST (the small-files problem again, and each extra
         # file is one extra task commit + one extra ledger rename).
@@ -729,10 +691,6 @@ def minhash_probe_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    num_bands: int = 16,
-    seed: int = 42,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
     """PROBE a new batch against the PERSISTED index maintained by
@@ -743,15 +701,12 @@ def minhash_probe_index(
     candidates; the corpus is touched only by id — without
     ``shingle_gids`` only the candidate docs' texts are shingled for
     the exact verify, never the whole corpus. ``corpus_df`` must
-    contain the texts of every id previously appended (``seed`` /
-    ``num_hashes`` / ``shingle_k`` must match the index's). Same
-    emitted-pair contract as :func:`minhash_incremental`: no false
-    positives ever; recall w.h.p. by the banding bound documented
-    there."""
+    contain the texts of every id previously appended. Same emitted-pair
+    contract as :func:`minhash_incremental`: no false positives ever;
+    recall w.h.p. by the banding bound documented there."""
     spark = new_df.sparkSession
-    rows_per_band = _rows_per_band(num_hashes, num_bands)
     sig_new = minhash_signatures(
-        new_df, text_col, id_col, num_hashes, shingle_k, seed,
+        new_df, text_col, id_col,
         shingle_gids=(
             shingle_gids.join(new_df.select(id_col), id_col, "left_semi")
             if shingle_gids is not None
@@ -767,9 +722,8 @@ def minhash_probe_index(
     bands_idx = ensure_parallelism(spark.read.parquet(f"{index_path}/bands"))
     sig_idx = ensure_parallelism(spark.read.parquet(f"{index_path}/sigs"))
     result = _probe_verified_pairs(
-        band_hashes(sig_new, id_col, num_bands, rows_per_band), bands_idx,
-        sig_new, sig_idx, new_df, corpus_df,
-        text_col, id_col, threshold, num_hashes, shingle_k,
+        band_hashes(sig_new, id_col), bands_idx,
+        sig_new, sig_idx, new_df, corpus_df, text_col, id_col, threshold,
         shingle_gids=shingle_gids,
     )
     sig_new.unpersist()
@@ -979,7 +933,6 @@ def simhash_verified_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 7,
     threshold: float = 0.5,
-    shingle_k: int = 5,
 ) -> DataFrame:
     """SimHash candidate generation + EXACT shingle-Jaccard verification:
     (id_a, id_b, jaccard ≥ threshold), same output contract as
@@ -988,7 +941,7 @@ def simhash_verified_pairs(
     exact-verified, so result equality is precisely the statement that
     SimHash banding missed no true pair).
 
-    Fingerprints hash the SAME char-k-shingle tokens the verification
+    Fingerprints hash the SAME char-5-shingle tokens the verification
     measures — one :func:`doc_shingle_gids` table feeds both, so each
     text is shingled once — and Hamming distance tracks shingle-Jaccard;
     ``max_hamming=7`` (8 pigeonhole chunks of 8 bits) holds a wide margin
@@ -997,7 +950,7 @@ def simhash_verified_pairs(
     the 124,750 possible pairs sit at Hamming ≤ 10 at all."""
     # persisted: fingerprints and verify arrays both read it; released
     # once the (small) result is materialized
-    gids = doc_shingle_gids(df, text_col, id_col, shingle_k).persist()
+    gids = doc_shingle_gids(df, text_col, id_col).persist()
     # persisted as in simhash_near_duplicates (sf0.1, 4 cores: 6.8 → 4.4 s)
     fps = _fingerprints(gids, id_col).persist()
     # checkpointed: the verify reads the pairs three times, each read
@@ -1021,7 +974,6 @@ def containment_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.9,
-    shingle_k: int = 5,
     shingle_gids: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment |A∩B|/|A| ≥ threshold — doc-inside-doc
@@ -1039,7 +991,7 @@ def containment_pairs(
     gids = (
         shingle_gids
         if shingle_gids is not None
-        else doc_shingle_gids(df, text_col, id_col, shingle_k).persist()
+        else doc_shingle_gids(df, text_col, id_col).persist()
     )
     pairs = _prefix_pairs(gids, id_col, threshold)
     arr = _gid_arrays(gids, _pair_ids(pairs, id_col), id_col)

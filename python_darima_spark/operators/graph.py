@@ -19,14 +19,12 @@ re-used by every iteration, and AQE handles skewed high-degree hubs
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Broadcast cap for the per-iteration rank vector (rows). The rank table
 # is |nodes| × (long, double) ≈ 30 B/row framed — ~300 MB at the 10M
-# default, comfortably inside executor memory and far under Spark's 8 GB
+# cap, comfortably inside executor memory and far under Spark's 8 GB
 # / 512M-row broadcast ceiling. Web-scale graphs have edges ≫ nodes, so
 # broadcasting the rank vector and never shuffling the (checkpointed,
 # possibly 100 TB) adjacency is the standard PageRank shape wherever the
@@ -34,9 +32,7 @@ from pyspark.sql import functions as F
 # The decision uses the EXACT node count (already materialized for the
 # teleport term) rather than Catalyst's post-aggregate size estimates,
 # which undershoot and never trigger the automatic broadcast here.
-_PR_BCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_PR_BCAST_MAX_NODES", str(10_000_000))
-)
+_PR_BCAST_MAX_NODES = 10_000_000
 
 
 def pagerank(

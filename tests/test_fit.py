@@ -225,3 +225,48 @@ def test_unknown_search_raises():
     y = _simulate_ar(0.5, 200, seed=1)
     with pytest.raises(ValueError, match="unknown search"):
         auto_ar_fit(y, search="Grid")
+
+
+def _swing_window(seed: int, zone: int, window: int) -> np.ndarray:
+    """One quarter-year window of an hourly zone-demand series: a base
+    level, daily and weekly profiles, a slow trend and AR(1) noise (the
+    shape of the long-series benchmark input), plus a yearly swing
+    ``0.3·base·sin(2πt/8760 + 1.5)``; 8,760 training hours, rounded to
+    3 decimals as written to CSV, split into 4 contiguous windows."""
+    rng = np.random.default_rng([seed, 2])
+    n = 8760 + 480
+    t = np.arange(n)
+    hour, dow = t % 24, (t // 24) % 7
+    daily = np.sin(2 * np.pi * (hour - 7) / 24) + 0.4 * np.sin(4 * np.pi * (hour - 3) / 24)
+    weekly = np.where(dow >= 5, -1.0, 0.3)
+    for _ in range(zone + 1):
+        base = rng.uniform(1500, 4000)
+        shocks = rng.normal(0, 0.01 * base, n)
+        noise = np.empty(n)
+        noise[0] = shocks[0]
+        for i in range(1, n):
+            noise[i] = 0.9 * noise[i - 1] + shocks[i]
+        y = (
+            base
+            + 0.2 * base * rng.uniform(0.8, 1.2) * daily
+            + 0.08 * base * rng.uniform(0.8, 1.2) * weekly
+            + base * rng.uniform(-0.05, 0.05) * t / n
+            + noise
+            + 0.3 * base * np.sin(2 * np.pi * t / 8760 + 1.5)
+        )
+    return np.round(y[:8760], 3).reshape(4, -1)[window]
+
+
+def test_yearly_swing_window_fits_bounded():
+    """A window of a series with a yearly swing used to win the order
+    search with a non-invertible MA part (|θ₂| > 1), whose AR(2000) form
+    came out with Σ|π| ≈ 2.6e8 and β0 ≈ −1.5e10. Only admissible fits
+    may win now. Their AR weights stay small (the differencing
+    polynomials alone reach Σ|π| = 7 at (d, D) = (2, 1)), and the
+    intercept stays within the data's range."""
+    y = _swing_window(seed=17, zone=3, window=3)
+    vec = np.asarray(fit_window_to_coef_vec(y, m=24, tol=2000))
+    beta0, pi = vec[0], vec[2:-1]
+    assert np.isfinite(vec).all()
+    assert np.abs(pi).sum() < 10
+    assert abs(beta0) < np.ptp(y)

@@ -11,10 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_darima_spark.operators.dedup import (
+    containment_pairs,
     dedup_exact,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
+    simhash_verified_pairs,
 )
 from python_darima_spark.operators.similarity import (
     cosine_topk,
@@ -189,10 +191,7 @@ def test_probe_verify_same_from_shared_gids_or_texts(
 def test_null_text_docs_never_pair(spark):
     """A NULL text has no shingle or word-gram set: two null docs used to
     come out as an exact (jaccard 1.0) near-duplicate pair."""
-    from python_darima_spark.operators.dedup import (
-        minhash_incremental,
-        simhash_verified_pairs,
-    )
+    from python_darima_spark.operators.dedup import minhash_incremental
 
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame(
@@ -216,21 +215,19 @@ def test_null_text_docs_never_pair(spark):
     assert got == {(4, 3)}
 
 
-@pytest.mark.parametrize("num_hashes,num_bands", [(8, 16), (64, 10), (64, 0)])
-def test_banding_parameters_checked(spark, docs_with_dups, num_hashes, num_bands):
-    """More bands than hashes made every doc pair a candidate, and a
-    remainder silently dropped the trailing hashes; both now raise."""
-    from python_darima_spark.operators.dedup import minhash_incremental
-
-    with pytest.raises(ValueError, match="num_bands"):
-        minhash_near_duplicates(
-            docs_with_dups, num_hashes=num_hashes, num_bands=num_bands
-        )
-    with pytest.raises(ValueError, match="num_bands"):
-        minhash_incremental(
-            docs_with_dups, docs_with_dups,
-            num_hashes=num_hashes, num_bands=num_bands,
-        )
+@pytest.mark.parametrize(
+    "op",
+    [minhash_near_duplicates, ngram_jaccard_pairs, simhash_verified_pairs, containment_pairs],
+    ids=lambda op: op.__name__,
+)
+def test_near_dup_operator_releases_its_cache(spark, docs_with_dups, op):
+    """Without ``shingle_gids`` each near-dup operator persists its own
+    token table and checkpoints its small result, so once the result is
+    read the session cache is as empty as before the call."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert op(docs_with_dups).collect()
+    assert cache.isEmpty()
 
 
 def test_dedup_exact_keep_checked(spark):
@@ -955,11 +952,6 @@ def test_containment_finds_doc_inside_doc_jaccard_misses(spark):
     larger document. Shingle-Jaccard ≈ |A|/|B| ≈ 0.17 — far below any
     near-dup threshold — but containment(A→B) = 1.0. The prefix filter
     must find the pair; MinHash at 0.5 must (correctly) not emit it."""
-    from python_darima_spark.operators.dedup import (
-        containment_pairs,
-        minhash_near_duplicates,
-    )
-
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(40).toPandas()
     inner = docs.loc[0, "text"]
     filler = " ".join(docs.loc[i, "text"] for i in range(1, 6))
@@ -1220,10 +1212,6 @@ def test_containment_extreme_asymmetry_survives_prefilter(spark):
     minhashes disagree — a fixed containment-estimate cutoff dropped
     such pairs >50% of the time. The ratio-aware drop table must pass
     it through to exact verification every time."""
-    import pandas as pd
-
-    from python_darima_spark.operators.dedup import containment_pairs
-
     small = "the quick brown fox jumps over the lazy dog again and more"
     filler = " ".join(f"unique{i}word{i * 7}" for i in range(400))
     rows = [

@@ -358,19 +358,27 @@ def _with_y_at(sdf, i, value):
 
 
 def test_null_training_value_is_skipped_by_forecast(spark):
-    """A null y inside the last tol training rows is no observation: the
-    forecasts equal those of the same data without that row."""
+    """A null or NaN y inside the last tol training rows is no
+    observation: the forecasts equal those of the same data without that
+    row, and a NaN scores as a null does (a NaN used to turn the MASE/MSIS
+    scale, and with it those scores, into NaN)."""
     cfg = DarimaConfig(num_windows=2, period=1, tol=10, max_p=3, max_q=0, max_P=0)
-    y = _ar1(300)
-    sdf = spark.createDataFrame(_series_pdf(y))
-    with_null = _with_y_at(sdf, 295, F.lit(None).cast("double"))
-    without = sdf.where(F.col("ts") != F.lit(T0 + dt.timedelta(hours=295)))
-    got = darima(with_null, cfg, h=5).forecasts.orderBy("step").toPandas()
-    want = darima(without, cfg, h=5).forecasts.orderBy("step").toPandas()
-    assert np.isfinite(got["mean"]).all()
-    for c in ["mean", "se", "lo_95", "hi_95"]:
-        np.testing.assert_allclose(got[c], want[c], rtol=1e-12)
-    assert (got["ts"] == want["ts"]).all()
+    sdf = spark.createDataFrame(_series_pdf(_ar1(305)))
+    is_train = F.col("ts") < F.lit(T0 + dt.timedelta(hours=300))
+    train, test = sdf.where(is_train), sdf.where(~is_train)
+    without = train.where(F.col("ts") != F.lit(T0 + dt.timedelta(hours=295)))
+    want = darima(without, cfg, test_df=test).forecasts.orderBy("step").toPandas()
+    scores = []
+    for bad in (F.lit(None).cast("double"), F.lit(float("nan"))):
+        res = darima(_with_y_at(train, 295, bad), cfg, test_df=test)
+        got = res.forecasts.orderBy("step").toPandas()
+        assert np.isfinite(got["mean"]).all()
+        for c in ["mean", "se", "lo_95", "hi_95"]:
+            np.testing.assert_allclose(got[c], want[c], rtol=1e-12)
+        assert (got["ts"] == want["ts"]).all()
+        scores.append(res.scores.toPandas())
+    assert np.isfinite(scores[0].to_numpy()).all()
+    pd.testing.assert_frame_equal(scores[1], scores[0], check_exact=False, rtol=1e-12)
 
 
 def test_nan_training_value_is_no_dlsa_observation(spark):
