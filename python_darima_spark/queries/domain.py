@@ -792,7 +792,7 @@ def q_ts_backtest_arima(spark: SparkSession, sf: str) -> DataFrame:
     fit+combine+recursive-forecast path instead of seasonal naive. Per
     fold the train slice is a plan-level filter (ts ≤ cutoff) — three
     fit pipelines union into one job, each a grouped Arrow fit + hash
-    combine + cogrouped forecast exactly like q_ts_forecast. Rows-only
+    combine + per-series Arrow forecast exactly like q_ts_forecast. Rows-only
     (ARIMA is not SQL-expressible); the fold/metric plumbing it shares
     with q_ts_backtest IS hash-verified there, so this entry adds only
     the model swap. Output: (series_id, fold, n_points, mae)."""
@@ -1231,7 +1231,7 @@ QUERIES = {
            FROM test
            JOIN last_day ON last_day.series_id = test.series_id
                         AND hod = hour(test.ts)
-           JOIN scale ON scale.series_id = test.series_id""",
+           LEFT JOIN scale ON scale.series_id = test.series_id""",
     ),
     "q_ts_backtest": QuerySpec(
         q_ts_backtest,

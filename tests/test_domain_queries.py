@@ -157,7 +157,7 @@ def test_arima_backtest_beats_seasonal_naive(spark):
 
 def test_unrolled_forecast_matches_real_pipeline(spark, sf_dir):
     """The q_ts_forecast_unrolled surrogate must compute the SAME numbers
-    the real cogrouped-Arrow forecast() recursion produces when given the
+    the real Arrow forecast() recursion produces when given the
     surrogate's fixed coefficients (tol=2, h=3) — proving the hash-green
     SQL restatement certifies the actual pipeline arithmetic, not a
     lookalike."""

@@ -8,16 +8,19 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from python_darima_spark.darima.arima_math import normal_ppf
 from python_darima_spark.darima.fit import coef_names, fit_window_to_coef_vec
 from python_darima_spark.darima.pipeline import (
+    FORECAST_SCHEMA,
     DarimaConfig,
     combine_coefs,
     darima,
     evaluate,
     fit_windows,
     forecast,
+    score,
 )
 from python_darima_spark.operators.timeseries import resample_regular, split_series
 
@@ -314,6 +317,65 @@ def test_evaluate_scale_join_not_pinned_broadcast(spark):
     assert "AdaptiveSparkPlan" in physical
 
 
+def test_evaluate_keeps_series_without_seasonal_pair(spark):
+    """A series with no two observed values m rows apart has no MASE/MSIS
+    scale. Its test rows stay, with NULL MASE and MSIS, as a constant
+    series' (scale 0) do, and its sMAPE counts in the scores; in
+    ``evaluate`` and in ``darima``'s one-pass scale alike."""
+    cfg = DarimaConfig(period=4, levels=(80,))
+    at = T0 + dt.timedelta(hours=10)
+    train = pd.concat(
+        [
+            _series_pdf([1.0, 2.0, 3.0], "short"),
+            _series_pdf([5.0] * 6, "flat"),
+            _series_pdf([1.0, 2.0, 3.0, 4.0, 5.0, 6.0], "ok"),
+        ]
+    )
+    sids = ["flat", "ok", "short"]
+    test = pd.DataFrame({"series_id": sids, "ts": at, "y": 6.0})
+    fc = pd.DataFrame(
+        {
+            "series_id": sids, "step": 1, "ts": at,
+            "mean": 4.0, "se": 1.0, "lo_80": 3.0, "hi_80": 5.0,
+        }
+    )
+    ev = (
+        evaluate(
+            spark.createDataFrame(fc),
+            spark.createDataFrame(test),
+            spark.createDataFrame(train),
+            cfg,
+        )
+        .orderBy("series_id")
+        .toPandas()
+    )
+    assert ev["series_id"].tolist() == sids
+    assert ev["mase"].isna().tolist() == [True, False, True]
+    assert ev["msis_80"].isna().tolist() == [True, False, True]
+    np.testing.assert_allclose(ev["smape"], [0.4] * 3)
+
+    # observed only at hours ≡ 2, 3 (mod 4): no observed pair 2 rows apart
+    y = _ar1(400, seed=5)
+    gappy = _series_pdf(np.where(np.arange(400) % 4 >= 2, y, np.nan), "gappy")
+    cfg = DarimaConfig(num_windows=2, period=2, tol=10, max_p=2, max_q=0, max_P=0, max_Q=0)
+    res = darima(
+        spark.createDataFrame(pd.concat([_series_pdf(_ar1(400), "a"), gappy])),
+        cfg,
+        spark.createDataFrame(
+            pd.concat(
+                [
+                    _series_pdf(_ar1(5, seed=s), sid, start=T0 + dt.timedelta(hours=400))
+                    for s, sid in ((1, "a"), (2, "gappy"))
+                ]
+            )
+        ),
+    )
+    ev = res.evaluation.toPandas()
+    assert (ev.groupby("series_id").size() == 5).all() and len(ev) == 10
+    assert ev["mase"].isna().tolist() == (ev["series_id"] == "gappy").tolist()
+    assert ev["smape"].notna().all()
+
+
 @pytest.fixture(scope="module")
 def two_series(spark):
     """Two AR(1) series, 400 hourly training and 20 test points each."""
@@ -398,28 +460,95 @@ def test_nan_training_value_is_no_dlsa_observation(spark):
         assert got[k] == pytest.approx(want[k], rel=1e-12), k
 
 
+def _lazy_case(train, test, case):
+    """``two_series`` as the named case of the lazy-composition test."""
+    if case == "roundrobin":
+        return split_series(train, 2, strategy="roundrobin"), test
+    if case == "empty_window":
+        # three range windows; the middle one of each series has no
+        # observed row, so each series still combines two fitted windows
+        win = split_series(train, 3)
+        return win.withColumn("y", F.when(F.col("window_id") != 1, F.col("y"))), test
+    if case == "null_last":
+        return _with_y_at(train, 399, F.lit(None).cast("double")), test
+    if case == "ntz":
+        # pre-split: split_series' range windows need a zoned timestamp
+        def ntz(df):
+            return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+
+        return ntz(split_series(train, 2)), ntz(test)
+    return train, test
+
+
+def _sorted(df, keys):
+    return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("case", ["contiguous", "roundrobin", "empty_window", "null_last", "ntz"])
 @pytest.mark.parametrize("method", ["mean", "dlsa"])
-def test_darima_equals_lazy_composition(spark, two_series, method):
+def test_darima_equals_lazy_composition(spark, two_series, method, case):
     """The checkpointed result holds what the lazy building blocks
-    compute: the same combined coefficients bit for bit (two windows, so
-    the combine's sums cannot depend on merge order) and the same
-    forecasts."""
+    compute: the same combined coefficients bit for bit (two fitted
+    windows per series, so the combine's sums cannot depend on merge
+    order), the same forecasts, evaluation and scores, for any split of
+    the training rows, unobserved rows and timestamp type."""
     cfg = DarimaConfig(
         num_windows=2, period=1, tol=20, method=method, max_p=3, max_q=0, max_P=0
     )
-    train, _ = two_series
-    res = darima(train, cfg, h=10)
+    train, test = _lazy_case(*two_series, case)
+    res = darima(train, cfg, test, h=10)
     lazy_coefs = combine_coefs(fit_windows(train, cfg), cfg)
     keys = ["series_id", "coef"]
-    got = res.coefs.toPandas().sort_values(keys).reset_index(drop=True)
-    want = lazy_coefs.toPandas().sort_values(keys).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_exact=True)
-    keys = ["series_id", "step"]
-    got = res.forecasts.toPandas().sort_values(keys).reset_index(drop=True)
-    want = (
-        forecast(train, lazy_coefs, 10, cfg).toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        _sorted(res.coefs, keys), _sorted(lazy_coefs, keys), check_exact=True
     )
+    lazy_fc = forecast(train, lazy_coefs, 10, cfg)
+    plan = lazy_fc._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" not in plan
+    want_schema = [(f.name, f.dataType) for f in _parse_datatype_string(FORECAST_SCHEMA).fields]
+    for fc in (res.forecasts, lazy_fc):
+        assert [(f.name, f.dataType) for f in fc.schema.fields] == want_schema
+    keys = ["series_id", "step"]
+    got, want = _sorted(res.forecasts, keys), _sorted(lazy_fc, keys)
+    assert len(got) == 20
+    assert (got["ts"] == want["ts"]).all()
     pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12, atol=0)
+    keys = ["series_id", "ts"]
+    lazy_ev = evaluate(lazy_fc, test, train, cfg)
+    got, want = _sorted(res.evaluation, keys), _sorted(lazy_ev, keys)
+    assert len(got) == (18 if case == "null_last" else 20)
+    pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12, atol=0)
+    pd.testing.assert_frame_equal(
+        res.scores.toPandas(), score(lazy_ev, cfg).toPandas(), check_exact=False, rtol=1e-12
+    )
+
+
+def test_darima_reads_training_rows_once(spark, two_series):
+    """Fit, combine, forecast and the MASE/MSIS scale share one pass over
+    the training rows: reading every frame of the result evaluates the
+    training frame once per row."""
+    cfg = DarimaConfig(num_windows=2, period=1, tol=20, max_p=3, max_q=0, max_P=0)
+    train, test = two_series
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(y):
+        seen.add(1)
+        return y
+
+    counted = train.withColumn("y", F.udf(count, "double").asNondeterministic()("y"))
+    res = darima(counted, cfg, test, h=20)
+    for name in ("coefs", "forecasts", "evaluation", "scores"):
+        getattr(res, name).collect()
+    assert seen.value == train.count()
+
+
+def test_darima_empty_test_needs_h(spark, two_series):
+    """Without ``h`` the horizon comes from the test rows; an empty test
+    frame has none, which is a usage error, not a crash in the forecast."""
+    train, test = two_series
+    cfg = DarimaConfig(num_windows=2, period=1, tol=20, max_p=3, max_q=0, max_P=0)
+    with pytest.raises(ValueError, match="pass h"):
+        darima(train, cfg, test_df=test.limit(0))
 
 
 def test_darima_fits_and_forecasts_once(spark, two_series):
