@@ -6,8 +6,10 @@ the hot path. Every near-dup operator reads one token table, ``(id, gid =
 xxhash64(token))`` with distinct rows per document (:func:`doc_shingle_gids`,
 :func:`doc_word_gids`; a NULL text has no tokens and never pairs), takes
 candidates from one bucket self-join (:func:`_bucket_pairs`) or one prefix
-filter (:func:`_prefix_pairs`), and verifies Jaccard or containment exactly
-on sorted gid arrays. Scale notes per operator:
+filter (:func:`_prefix_pairs`), settles the candidate ids in one eager
+checkpoint (:func:`_settle`), and verifies Jaccard or containment exactly in
+one tail (:func:`_verify`) on sorted gid arrays of the candidate docs only;
+every verified result is an eager checkpoint. Scale notes per operator:
 
 * exact       — one hash-shuffle on the 8-byte digest; keep-first is a
                 per-digest min, not a window sort over everything.
@@ -72,10 +74,9 @@ def dedup_exact(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    keep: str = "min",
 ) -> DataFrame:
     """Exact dedup by content digest (sha2-256), keeping one representative
-    per digest (the min/max id — an agg+semi-join, cheaper than a global
+    per digest (the min id — an agg+semi-join, cheaper than a global
     row_number window at scale).
 
     SKINNY shuffles (round-6 sf1 profile): the digest aggregate sees only
@@ -83,18 +84,12 @@ def dedup_exact(
     id alone, so when the keeper-id set fits the broadcast threshold
     (8 B/doc) the full-width rows never cross an exchange; when it does
     not, the semi-join shuffles rows once by id, still never by the
-    64-char digest with text in tow.
-
-    ``keep`` is ``"min"`` or ``"max"``; any other value raises
-    ``ValueError``."""
-    if keep not in ("min", "max"):
-        raise ValueError(f"keep must be 'min' or 'max', got {keep!r}")
-    agg_fn = F.min if keep == "min" else F.max
+    64-char digest with text in tow."""
     digest = F.sha2(F.col(text_col), 256)
     keeper_ids = (
         df.select(F.col(id_col), digest.alias("_digest"))
         .groupBy("_digest")
-        .agg(agg_fn(id_col).alias(id_col))
+        .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
     return df.join(keeper_ids, on=id_col, how="left_semi")
@@ -325,21 +320,15 @@ def _estimate_prefilter(
     signature-estimated Jaccard — matching minhashes / 64 — is
     at least ``threshold − 0.2``: ≈3.5σ below the target for 64 hashes,
     so true pairs survive while the LSH false positives never reach
-    exact verification.
-
-    Survivors are byte-tiny, so they are repartitioned BY NUMBER: AQE's
-    byte-based coalescing ran the CPU-heavy verify tail on 6 of 32 cores
-    (34 s vs 14 s at sf1; REPARTITION_BY_NUM is exempt). The eager
-    checkpoint stops the verify's up-to-three reads each re-running the
-    sig→band→prefilter prefix (4 s of the 5.5 s sf0.01 wall, round 8),
-    and drops the signatures from the lineage: callers may release them."""
+    exact verification. The survivors are settled (:func:`_settle`), so
+    callers may release the signatures."""
     a, b = cands.columns
     est_match = F.aggregate(
         F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    pre = (
+    return _settle(
         cands.join(
             sig_a.select(F.col(id_col).alias(a), F.col("sig").alias("_sa")),
             on=a,
@@ -350,32 +339,19 @@ def _estimate_prefilter(
         )
         .where(est_match / F.lit(float(_NUM_HASHES)) >= F.lit(threshold - 0.2))
         .select(a, b)
-        .repartition(shuffle_width(cands.sparkSession))
-    )
-    return pre.localCheckpoint(eager=True)
-
-
-def _gid_arrays(gids: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
-    """``(id, _sh)``: the shingle set of each doc in ``ids`` as a sorted
-    gid array — a semi-join, so never built for the whole corpus."""
-    return (
-        gids.join(ids, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("gid")).alias("_sh"))
     )
 
 
-def _pair_ids(pairs: DataFrame, id_col: str) -> DataFrame:
-    """The ids on either side of the ``(id_a, id_b)`` pairs, as one
-    ``id_col`` column for :func:`_gid_arrays`. Broadcast: the planner
-    cannot see the size of these answer-sized ids through a checkpoint,
-    so it shuffled the whole text or gid table and added a runtime
-    bloom-filter scan. No distinct: a semi-join needs none, and it costs
-    a shuffle stage."""
-    return F.broadcast(
-        pairs.select(F.col("id_a").alias(id_col)).union(
-            pairs.select(F.col("id_b").alias(id_col))
-        )
+def _settle(pairs: DataFrame) -> DataFrame:
+    """The one candidate settle step: ``pairs`` repartitioned BY NUMBER
+    and checkpointed eagerly. Candidates are byte-tiny, and AQE's
+    byte-based coalescing ran the CPU-heavy verify on 6 of 32 cores
+    (34 s vs 14 s at sf1; REPARTITION_BY_NUM is exempt). The checkpoint
+    stops each of the verify's reads re-running the candidate lineage
+    (4 s of the 5.5 s sf0.01 wall, round 8) and drops that lineage, so
+    callers may release what it read."""
+    return pairs.repartition(shuffle_width(pairs.sparkSession)).localCheckpoint(
+        eager=True
     )
 
 
@@ -384,7 +360,7 @@ def _with_sides(
 ) -> DataFrame:
     """``pairs`` (two id columns) with ``col`` of each side's per-id table
     joined on as ``<col>_a`` and ``<col>_b``: the sorted gid arrays
-    ``_sh`` of :func:`_gid_arrays`, or the embedding vectors. An id
+    ``_sh`` of :func:`_verify`, or the embedding vectors. An id
     missing from its table (a NULL text has no tokens) drops the pair."""
     a, b = pairs.columns
     return pairs.join(
@@ -396,27 +372,51 @@ def _with_sides(
     )
 
 
-def _jaccard_verify(
+def _verify(
     pairs: DataFrame,
-    arr_a: DataFrame,
-    arr_b: DataFrame,
+    gids: DataFrame,
     id_col: str,
     threshold: float,
+    gids_b: DataFrame | None = None,
+    containment: bool = False,
 ) -> DataFrame:
-    """The one exact-verify tail: keep the id pairs (``pairs``' two
-    columns) whose token-set Jaccard on the sorted gid arrays
-    (:func:`_with_sides`) is ≥ ``threshold``, rounded to 6 places. Int
-    arrays intersect ~10× cheaper than 5-char-string arrays (the
-    containment_pairs measurement); gid Jaccard equals string Jaccard up
-    to 64-bit collisions (~1e-13/doc)."""
+    """The one exact-verify tail: the settled candidate ids (``pairs``'
+    two columns) whose token sets, as sorted gid arrays built for the
+    candidate docs only, have Jaccard |A∩B| / (|A| + |B| − |A∩B|) ≥
+    ``threshold`` (the arrays are distinct, so that is the union's size)
+    or, with ``containment``, |A∩B|/|A| or |A∩B|/|B| ≥ it; rounded to 6
+    places. Both sides read ``gids`` and share one array table unless
+    side b has its own ``gids_b``. The pair ids are broadcast and not
+    distinct: the planner cannot see their size through a checkpoint, so
+    it shuffled the whole token table, and a distinct costs a shuffle
+    stage. Int arrays intersect ~10× cheaper than 5-char strings; gid
+    Jaccard equals string Jaccard up to 64-bit collisions (~1e-13/doc).
+    The result is an eager checkpoint: callers may release the tables."""
     a, b = pairs.columns
-    joined = _with_sides(pairs, arr_a, arr_b, id_col, "_sh")
+    sides = [(gids, [a, b])] if gids_b is None else [(gids, [a]), (gids_b, [b])]
+    arrs = [
+        tokens.join(
+            F.broadcast(pairs.select(F.explode(F.array(*ids)).alias(id_col))),
+            id_col,
+            "left_semi",
+        )
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_list("gid")).alias("_sh"))
+        for tokens, ids in sides
+    ]
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    union = F.size(F.array_union("_sh_a", "_sh_b")).cast("double")
+    na, nb = F.size("_sh_a"), F.size("_sh_b")
+    if containment:
+        cols = {"containment_a": inter / na, "containment_b": inter / nb}
+        keep = F.greatest(*cols.values()) >= threshold
+    else:
+        cols = {"jaccard": inter / (na + nb - inter)}
+        keep = cols["jaccard"] >= threshold
     return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select(a, b, F.round("jaccard", 6).alias("jaccard"))
+        _with_sides(pairs, arrs[0], arrs[-1], id_col, "_sh")
+        .where(keep)
+        .select(a, b, *[F.round(c, 6).alias(n) for n, c in cols.items()])
+        .localCheckpoint(eager=True)
     )
 
 
@@ -462,10 +462,7 @@ def minhash_near_duplicates(
     cands = minhash_candidate_pairs(sigs, id_col, max_bucket_size)
     pre = _estimate_prefilter(cands, sigs, sigs, id_col, threshold)
     sigs.unpersist()
-    arr = _gid_arrays(gids, _pair_ids(pre, id_col), id_col)
-    result = _jaccard_verify(pre, arr, arr, id_col, threshold).localCheckpoint(
-        eager=True
-    )
+    result = _verify(pre, gids, id_col, threshold)
     if shingle_gids is None:
         gids.unpersist()
     return result
@@ -504,6 +501,10 @@ def minhash_incremental(
     pairs comfortably above the threshold (the q_dedup_incremental
     fixture pairs sit at j ≥ 0.8, where missed-pair probability is
     < 1e-3 per pair).
+
+    The (small) result is an eager checkpoint: reading it again does not
+    re-run the verify and its text re-shingle, and the signatures this
+    call persisted are released before it returns.
     """
     # NOTE (round 10): wiring the family-shared ``shingle_gids`` stage
     # through here (as minhash_probe_index does) was tried and MEASURED
@@ -539,8 +540,8 @@ def _probe_verified_pairs(
     band keys to the index's (in memory or the persisted table) for
     ``(id_new, id_old)`` candidates, estimate-prefilter, exact-verify.
     Gids come from ``shingle_gids`` (covering batch and corpus) if given,
-    else from the candidate docs' texts; each side gets its own array
-    table, so batch and corpus ids never mix."""
+    else from the candidate docs' texts, one table per side, so batch and
+    corpus ids never mix."""
     cands = (
         bands_new.withColumnRenamed(id_col, "id_new")
         .join(bands_idx.withColumnRenamed(id_col, "id_old"), ["band_id", "band_hash"])
@@ -548,17 +549,19 @@ def _probe_verified_pairs(
         .distinct()
     )
     pre = _estimate_prefilter(cands, sig_new, sig_idx, id_col, threshold)
-    arrs = []
-    for docs, side in ((new_df, "id_new"), (old_df, "id_old")):
-        # broadcast and not distinct, as in _pair_ids
-        ids = F.broadcast(pre.select(F.col(side).alias(id_col)))
-        gids = shingle_gids
-        if gids is None:
-            gids = doc_shingle_gids(
-                docs.join(ids, id_col, "left_semi"), text_col, id_col
-            )
-        arrs.append(_gid_arrays(gids, ids, id_col))
-    return _jaccard_verify(pre, *arrs, id_col, threshold)
+    if shingle_gids is not None:
+        return _verify(pre, shingle_gids, id_col, threshold)
+    # only the candidate docs' texts are shingled; the ids are broadcast
+    # and not distinct, as in _verify
+    new_gids, old_gids = (
+        doc_shingle_gids(
+            docs.join(F.broadcast(pre.select(c).toDF(id_col)), id_col, "left_semi"),
+            text_col,
+            id_col,
+        )
+        for docs, c in ((new_df, "id_new"), (old_df, "id_old"))
+    )
+    return _verify(pre, new_gids, id_col, threshold, gids_b=old_gids)
 
 
 def minhash_index_append(
@@ -703,7 +706,8 @@ def minhash_probe_index(
     the exact verify, never the whole corpus. ``corpus_df`` must
     contain the texts of every id previously appended. Same emitted-pair
     contract as :func:`minhash_incremental`: no false positives ever;
-    recall w.h.p. by the banding bound documented there."""
+    recall w.h.p. by the banding bound documented there. The result is
+    an eager checkpoint, as in :func:`minhash_incremental`."""
     spark = new_df.sparkSession
     sig_new = minhash_signatures(
         new_df, text_col, id_col,
@@ -792,7 +796,7 @@ def _prefix_pairs(gids: DataFrame, id_col: str, threshold: float) -> DataFrame:
     bigger = (F.col("_ni") > F.col("_np")) | (
         (F.col("_ni") == F.col("_np")) & (F.col("_iid") > F.col("_pid"))
     )
-    return (
+    return _settle(
         probe.join(index, "gid")
         .where(bigger)
         .groupBy("_pid", "_iid", "_need")
@@ -802,8 +806,6 @@ def _prefix_pairs(gids: DataFrame, id_col: str, threshold: float) -> DataFrame:
             F.least("_pid", "_iid").alias("id_a"),
             F.greatest("_pid", "_iid").alias("id_b"),
         )
-        .repartition(shuffle_width(gids.sparkSession))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -821,15 +823,11 @@ def ngram_jaccard_pairs(
     (:func:`_prefix_pairs`, recall 1.0); word 3-grams are overwhelmingly
     df=1, so candidate volume tracks true-pair volume, not corpus-pair
     volume. Candidates are verified on sorted gid arrays of candidate
-    docs only (:func:`_jaccard_verify`)."""
+    docs only (:func:`_verify`)."""
     # persisted: the prefix filter and the verify arrays both read the
     # gram table; released once the (small) result is materialized
     gids = doc_word_gids(df, text_col, id_col, n).persist()
-    pairs = _prefix_pairs(gids, id_col, threshold)
-    arr = _gid_arrays(gids, _pair_ids(pairs, id_col), id_col)
-    result = _jaccard_verify(pairs, arr, arr, id_col, threshold).localCheckpoint(
-        eager=True
-    )
+    result = _verify(_prefix_pairs(gids, id_col, threshold), gids, id_col, threshold)
     gids.unpersist()
     return result
 
@@ -953,18 +951,11 @@ def simhash_verified_pairs(
     gids = doc_shingle_gids(df, text_col, id_col).persist()
     # persisted as in simhash_near_duplicates (sf0.1, 4 cores: 6.8 → 4.4 s)
     fps = _fingerprints(gids, id_col).persist()
-    # checkpointed: the verify reads the pairs three times, each read
-    # re-running the fingerprints + chunk self-join (2.5× the sf0.1 wall)
-    cands = (
-        _hamming_pairs(fps, id_col, max_hamming)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
+    # settled: each of the verify's reads would re-run the fingerprints
+    # and the chunk self-join (2.5× the sf0.1 wall)
+    cands = _settle(_hamming_pairs(fps, id_col, max_hamming).select("id_a", "id_b"))
     fps.unpersist()
-    arr = _gid_arrays(gids, _pair_ids(cands, id_col), id_col)
-    result = _jaccard_verify(cands, arr, arr, id_col, threshold).localCheckpoint(
-        eager=True
-    )
+    result = _verify(cands, gids, id_col, threshold)
     gids.unpersist()
     return result
 
@@ -994,25 +985,7 @@ def containment_pairs(
         else doc_shingle_gids(df, text_col, id_col).persist()
     )
     pairs = _prefix_pairs(gids, id_col, threshold)
-    arr = _gid_arrays(gids, _pair_ids(pairs, id_col), id_col)
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    cont_a = inter / F.size("_sh_a")
-    cont_b = inter / F.size("_sh_b")
-    # materialize the (small) result eagerly so the inline shingle table
-    # can be released here — a lazy return would pin it for the session
-    # lifetime (every invocation leaking a cache entry), and the caller
-    # has no handle to unpersist it
-    result = (
-        _with_sides(pairs, arr, arr, id_col, "_sh")
-        .where(F.greatest(cont_a, cont_b) >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cont_a, 6).alias("containment_a"),
-            F.round(cont_b, 6).alias("containment_b"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    result = _verify(pairs, gids, id_col, threshold, containment=True)
     if shingle_gids is None:
         gids.unpersist()
     return result

@@ -209,11 +209,10 @@ def split_series(
         w = Window.partitionBy(series_col)
         lo = F.min(ts_col).over(w)
         hi = F.max(ts_col).over(w)
-        frac = (
-            F.col(ts_col).cast("double") - lo.cast("double")
-        ) / F.greatest(
-            hi.cast("double") - lo.cast("double"), F.lit(1e-9)
-        )
+        # epoch_seconds, not a double cast: TIMESTAMP_NTZ has no numeric
+        # cast, and for TIMESTAMP the two are the same value
+        lo, hi, t = (epoch_seconds(c, fractional=True) for c in (lo, hi, ts_col))
+        frac = (t - lo) / F.greatest(hi - lo, F.lit(1e-9))
         return df.where(F.col(series_col).isNotNull()).withColumn(
             "window_id",
             F.least(F.floor(frac * k), F.lit(k - 1)).cast("int"),

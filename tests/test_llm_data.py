@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 from python_darima_spark.operators.dedup import (
     containment_pairs,
     dedup_exact,
+    minhash_incremental,
+    minhash_index_append,
     minhash_near_duplicates,
+    minhash_probe_index,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
     simhash_verified_pairs,
@@ -215,26 +218,56 @@ def test_null_text_docs_never_pair(spark):
     assert got == {(4, 3)}
 
 
-@pytest.mark.parametrize(
-    "op",
-    [minhash_near_duplicates, ngram_jaccard_pairs, simhash_verified_pairs, containment_pairs],
-    ids=lambda op: op.__name__,
-)
-def test_near_dup_operator_releases_its_cache(spark, docs_with_dups, op):
+_SELF_JOIN_OPS = {
+    op.__name__: op
+    for op in (
+        minhash_near_duplicates,
+        ngram_jaccard_pairs,
+        simhash_verified_pairs,
+        containment_pairs,
+    )
+}
+
+
+def _verified(op, docs, tmp_path):
+    """The named verified near-dup operator over ``docs``; the probe
+    operators match the planted copies (ids ≥ 9000) against the rest."""
+    new, old = docs.where("doc_id >= 9000"), docs.where("doc_id < 9000")
+    if op == "minhash_incremental":
+        return minhash_incremental(new, old, threshold=0.5)
+    if op == "minhash_probe_index":
+        idx = str(tmp_path / "mh_index")
+        minhash_index_append(old, idx)
+        return minhash_probe_index(new, idx, old, threshold=0.5)
+    return _SELF_JOIN_OPS[op](docs)
+
+
+@pytest.mark.parametrize("op", [*_SELF_JOIN_OPS, "minhash_incremental"])
+def test_near_dup_operator_releases_its_cache(spark, docs_with_dups, tmp_path, op):
     """Without ``shingle_gids`` each near-dup operator persists its own
     token table and checkpoints its small result, so once the result is
     read the session cache is as empty as before the call."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
-    assert op(docs_with_dups).collect()
+    assert _verified(op, docs_with_dups, tmp_path).collect()
     assert cache.isEmpty()
 
 
-def test_dedup_exact_keep_checked(spark):
-    df = spark.createDataFrame([(1, "x"), (2, "x")], "doc_id long, text string")
-    assert [r.doc_id for r in dedup_exact(df, keep="max").collect()] == [2]
-    with pytest.raises(ValueError, match="keep"):
-        dedup_exact(df, keep="first")
+@pytest.mark.parametrize(
+    "op", [*_SELF_JOIN_OPS, "minhash_incremental", "minhash_probe_index"]
+)
+def test_verified_operator_returns_a_checkpoint(spark, docs_with_dups, tmp_path, op):
+    """Every exactly verified near-dup operator returns an eager
+    checkpoint: its plan is a scan of the stored rows, so reading the
+    result again runs no shuffle, aggregate or join."""
+    out = _verified(op, docs_with_dups, tmp_path)
+    qe = out._jdf.queryExecution()
+    assert qe.optimizedPlan().nodeName() == "LogicalRDD"
+    plan = qe.executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
+    for node in ("Exchange", "Aggregate", "Join"):
+        assert node not in plan
+    assert out.count()
 
 
 def test_index_append_tagged_replay_is_idempotent(spark, tmp_path, docs_with_dups):

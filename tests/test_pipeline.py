@@ -472,11 +472,11 @@ def _lazy_case(train, test, case):
     if case == "null_last":
         return _with_y_at(train, 399, F.lit(None).cast("double")), test
     if case == "ntz":
-        # pre-split: split_series' range windows need a zoned timestamp
+        # unsplit: darima() and the building blocks split it themselves
         def ntz(df):
             return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
-        return ntz(split_series(train, 2)), ntz(test)
+        return ntz(train), ntz(test)
     return train, test
 
 
