@@ -322,23 +322,15 @@ def _estimate_prefilter(
     so true pairs survive while the LSH false positives never reach
     exact verification. The survivors are settled (:func:`_settle`), so
     callers may release the signatures."""
-    a, b = cands.columns
     est_match = F.aggregate(
-        F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
+        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
     )
     return _settle(
-        cands.join(
-            sig_a.select(F.col(id_col).alias(a), F.col("sig").alias("_sa")),
-            on=a,
-        )
-        .join(
-            sig_b.select(F.col(id_col).alias(b), F.col("sig").alias("_sb")),
-            on=b,
-        )
+        _with_sides(cands, sig_a, sig_b, id_col, "sig")
         .where(est_match / F.lit(float(_NUM_HASHES)) >= F.lit(threshold - 0.2))
-        .select(a, b)
+        .select(*cands.columns)
     )
 
 
@@ -359,9 +351,10 @@ def _with_sides(
     pairs: DataFrame, side_a: DataFrame, side_b: DataFrame, id_col: str, col: str
 ) -> DataFrame:
     """``pairs`` (two id columns) with ``col`` of each side's per-id table
-    joined on as ``<col>_a`` and ``<col>_b``: the sorted gid arrays
-    ``_sh`` of :func:`_verify`, or the embedding vectors. An id
-    missing from its table (a NULL text has no tokens) drops the pair."""
+    joined on as ``<col>_a`` and ``<col>_b``: the MinHash signatures of
+    :func:`_estimate_prefilter`, the sorted gid arrays ``_sh`` of
+    :func:`_verify`, or the embedding vectors. An id missing from its
+    table (a NULL text has no tokens) drops the pair."""
     a, b = pairs.columns
     return pairs.join(
         side_a.select(F.col(id_col).alias(a), F.col(col).alias(f"{col}_a")),
@@ -763,10 +756,7 @@ def _prefix_pairs(gids: DataFrame, id_col: str, threshold: float) -> DataFrame:
     and each unordered pair emerges from one probe direction, so no
     distinct is needed. Every stage is linear in corpus token volume
     (containment: 10.0× candidates / ~4× wall at 10× data on local[32]).
-    Survivors are byte-tiny, so they are repartitioned BY NUMBER (the
-    :func:`_estimate_prefilter` finding: AQE's byte-based coalescing
-    would run the per-pair array intersects on a few partitions) and
-    checkpointed eagerly: the verify reads them up to three times."""
+    The survivors are settled (:func:`_settle`)."""
     # document frequency as a window count over gid: one shuffle, not
     # groupBy + join-back; then one keyed window pass computes both the
     # df-ascending probe rank and the doc's token-set size
